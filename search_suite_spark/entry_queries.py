@@ -830,8 +830,8 @@ COLLECTION_BATCH_QUERIES = {
 
 
 def q_collection_batch(spark, sf_dir):
-    """M scored queries x N segments in ONE batched dictionary job + one
-    result job (registry.query_collection_batch) — each qid's rows
+    """M scored queries x N segments in one result job, dictionaries
+    probed on the driver (registry.query_collection_batch) — each qid's rows
     identical to query_collection on that query alone."""
     from search_suite_spark.sources.registry import query_collection_batch
 

@@ -43,6 +43,7 @@ from search_suite_spark.operators.codec import BLOCK, varbyte_decode
 from search_suite_spark.sources.segments import (
     PACKED_SCHEMA,
     Segment,
+    collect_ids_capped,
     pack_and_write,
     read_segment,
     shard_of_doc_id,
@@ -339,15 +340,6 @@ def _merge_packed_arrow(drops_a_bc, drops_b_bc, max_row_postings=None):
     return go
 
 
-def _collect_ids_capped(df: DataFrame, limit: int) -> set[int] | None:
-    """Collect a (small) doc_id column to the driver, or None when it
-    exceeds ``limit`` rows — the fall-back-to-flat-path guard."""
-    rows = df.limit(limit + 1).collect()
-    if len(rows) > limit:
-        return None
-    return {int(r[0]) for r in rows}
-
-
 def _live_docs(seg: Segment) -> DataFrame:
     docs = seg.docs
     if seg.deletes is not None:
@@ -381,31 +373,35 @@ def _merge_packed(
 
     # dead-doc sets, exactly the flat path's semi-join semantics:
     #   side A drops its deletes; side B drops its deletes plus the
-    #   A-wins url dups (doc_ids of live-B docs whose url lives in A)
-    drops: dict[int, set[int]] = {0: set(), 1: set()}
+    #   A-wins url dups (doc_ids of live-B docs whose url lives in A).
+    # Deleted ids come from the segment snapshot when read_segment
+    # resolved them (the same ids queries filter); only a segment over
+    # the query-side cap still collects them here.
+    drops: dict[int, list[np.ndarray]] = {0: [], 1: []}
     for side, seg in live:
-        if seg.deletes is not None and seg.n_deletes_hint != 0:
-            got = _collect_ids_capped(
+        if seg.deletes is None or seg.n_deletes_hint == 0:
+            continue
+        got = seg.deleted_ids
+        if got is None:
+            got = collect_ids_capped(
                 seg.deletes.select("doc_id").distinct(), MAX_BROADCAST_DROPS
             )
-            if got is None:
-                return False
-            drops[side] |= got
+        if got is None or got.size > MAX_BROADCAST_DROPS:
+            return False
+        drops[side].append(got)
     if seg_a.num_docs > 0 and seg_b.num_docs > 0:
         dup = docs_b_all.join(
             docs_a.select("url"), "url", "left_semi"
         ).select("doc_id")
-        got = _collect_ids_capped(dup, MAX_BROADCAST_DROPS)
+        got = collect_ids_capped(dup, MAX_BROADCAST_DROPS)
         if got is None:
             return False
-        drops[1] |= got
+        drops[1].append(got)
 
-    def bc_sorted(ids: set[int]):
-        if not ids:
+    def bc_sorted(parts: list[np.ndarray]):
+        arr = np.unique(np.concatenate(parts)) if parts else None
+        if arr is None or arr.size == 0:
             return None
-        arr = np.sort(
-            np.fromiter(ids, dtype=np.int64, count=len(ids)).view(np.uint64)
-        )
         return spark.sparkContext.broadcast(arr)
 
     bc_a, bc_b = bc_sorted(drops[0]), bc_sorted(drops[1])

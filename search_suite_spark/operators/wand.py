@@ -25,9 +25,9 @@ The scale path of the query engine (SURVEY §2.5 Q4-Q7, north_rule):
      (TakeOrderedAndProject: per-partition heaps + driver merge — the
      bounded-heap merge of Q7/Q12).
 
-Deletions are filtered inside the shard kernel from a broadcast set
-(the docDeletions bitset analogue); corpus stats (N, avgdl, df) keep
-counting deleted docs, matching ranking.rs:48-50.
+Deletions are filtered inside the shard kernel from a sorted id set
+(the docDeletions bitset analogue, see _scatter); corpus stats (N,
+avgdl, df) keep counting deleted docs, matching ranking.rs:48-50.
 """
 
 from __future__ import annotations
@@ -47,7 +47,12 @@ from search_suite_spark.operators.codec import (
     unpack_blocks,
     unpack_ids,
 )
-from search_suite_spark.sources.segments import Segment
+from search_suite_spark.sources.segments import (
+    DELETES_BROADCAST_MAX,
+    Segment,
+    collect_ids_capped,
+    shard_of_doc_id,
+)
 
 RESULT_SCHEMA = "doc_id long, score double, term_count int"
 
@@ -513,40 +518,18 @@ def _build_lists(pdf: pd.DataFrame) -> dict:
 def _shard_kernel(terms_meta, n_docs, avgdl, k):
     """Build the per-shard conjunctive block-max scorer.
 
-    terms_meta: {term: (global_df, multiplicity)}. global_df may be None
-    for EVERY term, meaning the caller joined the dictionary's df onto
-    the posting rows JVM-side (wand_scored's single-job path) — the
-    kernel then reads each term's global df from the pdf's ``df`` column
-    and derives idf locally, so no dictionary values ever round-trip
-    through the driver. The returned kernel
-    takes (pdf, deleted_ids) — deleted_ids a sorted uint64 numpy array of
-    this shard's deleted doc ids; the caller either closes over one small
-    driver-collected array (low delete volume) or cogroups the deletes
-    table by shard so each kernel invocation gets only its shard's slice
-    (high volume — nothing ever materializes on the driver).
+    terms_meta: {term: (global_df, multiplicity)}, df and N segment-local
+    (ranking.rs:48-50). The returned kernel takes (pdf, deleted_ids) —
+    deleted_ids a sorted uint64 numpy array of this shard's deleted doc
+    ids (see _scatter for where it comes from).
     """
-    df_in_rows = any(df is None for df, _ in terms_meta.values())
-    idfs = (
-        {}
-        if df_in_rows
-        else {t: _idf(n_docs, df) for t, (df, _) in terms_meta.items()}
-    )
+    idfs = {t: _idf(n_docs, df) for t, (df, _) in terms_meta.items()}
 
     def kernel(pdf: pd.DataFrame, deleted_ids: np.ndarray) -> pd.DataFrame:
-        present = set(pdf["term"])
-        if present != set(terms_meta):
+        if set(pdf["term"]) != set(terms_meta):
             # some query term has no postings in this shard → empty AND
-            # (covers the global missing-term fast abort too on the
-            # single-job path: a term absent from the dictionary joins
-            # away everywhere)
             return _empty_result()
         lists = _build_lists(pdf)
-        if df_in_rows:
-            # global df rides every posting row (dictionary broadcast
-            # join); constant per term — idempotent to recompute across
-            # shards of the same worker
-            for t, g in pdf.groupby("term", sort=False):
-                idfs[t] = _idf(n_docs, int(g["df"].iat[0]))
         _stats_dict()["blocks_total"] += sum(
             tl.block_last.size for tl in lists.values()
         )
@@ -596,35 +579,180 @@ def _batch_shard_kernel(meta_bc, n_docs, avgdl, k):
     return kernel
 
 
-# above this many delete rows the deletes table is never collected to the
-# driver: it is shard-partitioned and cogrouped into the shard kernels
-# instead (compaction garbage-collects deletes, so most segments sit far
-# below this; the cap is a driver-OOM guard for delete-heavy workloads)
-DELETES_BROADCAST_MAX = 1 << 16
-
-
 def _route_deletes(seg: Segment, deletes_broadcast_max: int):
-    """(collected_array, deletes_df) — exactly one is populated.
+    """(deleted_ids, deletes_df): the sorted uint64 ids the kernels close
+    over, and — only above the cap — the deletes table to cogroup.
 
-    Volume routing reads the segment's metadata hint (parquet footer
-    row-count sum, an upper bound on distinct ids — conservative-safe)
-    so no per-query driver count() job runs; only when the hint is
-    unavailable does a live count decide."""
-    deleted = np.empty(0, dtype=np.uint64)
-    deletes_df = None
-    if seg.deletes is not None:
-        d = seg.deletes.select("doc_id").distinct()
-        n_del = (
-            seg.n_deletes_hint
-            if seg.n_deletes_hint is not None
-            else d.count()
+    A read segment routes without any Spark job: within the cap its ids
+    were resolved on the driver by read_segment; above it (hint set, no
+    ids) the table is cogrouped. Only a Segment without metadata
+    (hand-built: no hint, no ids) pays one capped collect."""
+    none = np.empty(0, dtype=np.uint64)
+    if seg.deletes is None:
+        return none, None
+    d = seg.deletes.select("doc_id").distinct()
+    ids = seg.deleted_ids
+    if ids is None and seg.n_deletes_hint is None:
+        ids = collect_ids_capped(d, deletes_broadcast_max)
+    if ids is None or ids.size > deletes_broadcast_max:
+        return none, d
+    return ids, None
+
+
+def _union(frames: list[DataFrame]) -> DataFrame:
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f)
+    return out
+
+
+def _new_stats(spark, stats: dict | None) -> None:
+    # created up front so early-abort paths still hand back readable
+    # (zero) accumulators
+    if stats is not None:
+        stats["blocks_decoded"] = spark.sparkContext.accumulator(0)
+        stats["blocks_total"] = spark.sparkContext.accumulator(0)
+
+
+def _counted(kernel, stats: dict):
+    """The kernel, adding its decode counts to the stats accumulators."""
+    acc_dec, acc_tot = stats["blocks_decoded"], stats["blocks_total"]
+
+    def counted(pdf, deleted_ids):
+        sd = _stats_dict()
+        d0, t0 = sd["blocks_decoded"], sd["blocks_total"]
+        out = kernel(pdf, deleted_ids)
+        acc_dec.add(sd["blocks_decoded"] - d0)
+        acc_tot.add(sd["blocks_total"] - t0)
+        return out
+
+    return counted
+
+
+def _scatter(
+    parts: list,
+    schema: str,
+    deletes_broadcast_max: int,
+    broadcast_cands: bool,
+    stats: dict | None = None,
+) -> DataFrame:
+    """THE packed-query scatter/gather, for one segment or many →
+    candidate rows (``schema`` columns plus ``url``, ``_seg``, ``doc_id``).
+
+    ``parts``: [(seg, rows, kernel)] — a segment, its term-filtered
+    postings, and its shard kernel ``kernel(pdf, deleted_ids)`` closed
+    over the segment-local N, avgdl and df. Every part's rows are tagged
+    ``_seg`` and scored in ONE groupBy("_seg", "shard").applyInPandas,
+    each group dispatching to its own segment's kernel: a collection
+    query costs one exchange and one kernel pass, not one per segment.
+
+    Deletes: ids within the cap ride the task closure (resolved at
+    read_segment — no job). A segment over the cap has its deletes
+    table shard-partitioned (shard = pmod(doc_id, n_shards) derives
+    from the id alone) and cogrouped on (_seg, shard), so each kernel
+    call sees only its shard's slice and nothing reaches the driver.
+
+    Urls resolve BEFORE any global limit: each shard kernel already
+    pruned to its local top-k (+ ties), so the join touches ≤
+    ~k·n_shards rows per segment, and the k-boundary tie-break lands on
+    url — a deterministic, externally-reproducible order (the packed and
+    flat paths then agree with the SQL oracle's ORDER BY score DESC, url
+    even on exact ties). ``broadcast_cands`` broadcasts the CANDIDATE
+    side (r6): without the hint the planner either broadcasts the whole
+    docs tables (rebuilt per query — 25 MB at 500k docs) or, past the
+    auto-broadcast threshold, sort-merges them per query. Measured at
+    500k docs: cold p50 0.86-1.01 s → 0.68-0.70 s. Unbounded result sets
+    (no top-k) keep the planner's choice.
+    """
+    deleted, kernels, tagged, dels = {}, {}, [], []
+    for i, (seg, rows, kernel) in enumerate(parts):
+        deleted[i], d = _route_deletes(seg, deletes_broadcast_max)
+        if d is not None:
+            if seg.n_shards <= 0:
+                # pmod(doc_id, 0) yields nulls → deletes silently
+                # mis-shard and deleted docs come back. n_shards is
+                # lineage-derived (read_segment); a hand-built Segment
+                # must set it.
+                raise ValueError(
+                    "cogrouped deletes need Segment.n_shards > 0 "
+                    f"(got {seg.n_shards}); read the segment via "
+                    "read_segment or raise deletes_broadcast_max"
+                )
+            dels.append(d.select(
+                F.lit(i).alias("_seg"),
+                shard_of_doc_id(seg.n_shards).alias("shard"),
+                "doc_id",
+            ))
+        kernels[i] = kernel if stats is None else _counted(kernel, stats)
+        tagged.append(rows.withColumn("_seg", F.lit(i)))
+    out_schema = "_seg int, " + schema
+
+    def run(key, pdf: pd.DataFrame, dead: np.ndarray) -> pd.DataFrame:
+        i = int(key[0])
+        out = kernels[i](pdf, dead)
+        out.insert(0, "_seg", np.full(len(out), i, dtype=np.int32))
+        return out
+
+    grouped = _union(tagged).groupBy("_seg", "shard")
+    if not dels:
+        cands = grouped.applyInPandas(
+            lambda key, pdf: run(key, pdf, deleted[int(key[0])]), out_schema
         )
-        if n_del <= deletes_broadcast_max:
-            vals = [r["doc_id"] for r in d.collect()]
-            deleted = np.sort(np.array(vals, dtype=np.int64).view(np.uint64))
-        else:
-            deletes_df = d
-    return deleted, deletes_df
+    else:
+        def cg(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+            dead = deleted[int(key[0])]
+            if len(right):
+                dead = np.union1d(dead, right["doc_id"].to_numpy(
+                    dtype=np.int64).view(np.uint64))
+            return run(key, left, dead)
+
+        cands = grouped.cogroup(
+            _union(dels).groupBy("_seg", "shard")
+        ).applyInPandas(cg, out_schema)
+
+    docs = _union([
+        seg.docs.select(F.lit(i).alias("_seg"), "doc_id", "url")
+        for i, (seg, _, _) in enumerate(parts)
+    ])
+    if broadcast_cands:
+        cands = F.broadcast(cands)
+    return cands.join(docs, ["_seg", "doc_id"])
+
+
+def scored_candidates(
+    segs: list[Segment],
+    query: str,
+    max_results: int | None,
+    term_dfs: list[dict[str, int]],
+    deletes_broadcast_max: int = DELETES_BROADCAST_MAX,
+    stats: dict | None = None,
+) -> DataFrame | None:
+    """Conjunctive block-max candidates of one query over one or more
+    segments, in ONE scatter (_scatter) → (_seg, url, score, term_count),
+    each segment scored with its own N, avgdl and df (``term_dfs``, one
+    {term: df} per segment). A segment whose dictionary lacks a query
+    term contributes nothing (the missing-term AND abort, query.rs:
+    34-40). Each shard's rows are already cut to its top-k plus ties;
+    the caller applies the global top-k. None = no segment can match."""
+    multiplicity = Counter(normalise(query))
+    if not multiplicity:
+        return None
+    parts = []
+    for seg, dfs in zip(segs, term_dfs):
+        if any(t not in dfs for t in multiplicity):
+            continue
+        terms_meta = {t: (dfs[t], m) for t, m in multiplicity.items()}
+        parts.append((
+            seg,
+            seg.postings.filter(F.col("term").isin(list(multiplicity))),
+            _shard_kernel(terms_meta, seg.num_docs, seg.avgdl, max_results),
+        ))
+    if not parts:
+        return None
+    return _scatter(
+        parts, RESULT_SCHEMA, deletes_broadcast_max,
+        broadcast_cands=max_results is not None, stats=stats,
+    ).select("_seg", "url", "score", "term_count")
 
 
 def wand_scored(
@@ -634,16 +762,15 @@ def wand_scored(
     deletes_broadcast_max: int = DELETES_BROADCAST_MAX,
     term_dfs: dict[str, int] | None = None,
     stats: dict | None = None,
-    dict_strategy: str = "collect",
 ) -> DataFrame:
     """Scored conjunctive query over a packed segment → (url, score,
-    term_count), rank-identical to the flat path (tests enforce it).
+    term_count), rank-identical to the flat path (tests enforce it) —
+    the one-segment call of scored_candidates, the scatter that
+    registry.query_collection runs over a whole collection.
 
     ``term_dfs``: precomputed {term: global df} covering (at least) every
-    query term present in this segment's dictionary — callers querying
-    MANY segments (registry.query_collection) batch all segments'
-    dictionary lookups into one tagged-union job and pass each segment's
-    slice here, instead of paying one driver round-trip per segment.
+    query term present in this segment's dictionary; by default the
+    segment's dictionary is probed on the driver (Segment.term_dfs).
 
     ``stats``: pass a dict to receive two Spark ACCUMULATORS under keys
     'blocks_decoded' / 'blocks_total' — executor-side counts of tf/dl
@@ -654,123 +781,17 @@ def wand_scored(
     the reference's mmap-granularity reads, index_reader.rs:271-311).
     """
     spark = seg.postings.sparkSession
-    if stats is not None:
-        # created up front so early-abort paths still hand back readable
-        # (zero) accumulators
-        stats["blocks_decoded"] = spark.sparkContext.accumulator(0)
-        stats["blocks_total"] = spark.sparkContext.accumulator(0)
-    q_terms = normalise(query)
-    empty = spark.createDataFrame([], "url string, score double, term_count int")
-    if not q_terms:
-        return empty
-
-    multiplicity = Counter(q_terms)
-    rows = seg.postings.filter(F.col("term").isin(list(multiplicity)))
-
-    # global df per term (Q1 term lookup) — three strategies:
-    #   1. caller-provided (a collection batches every segment's lookups
-    #      into one tagged-union job, registry.collection_term_dfs);
-    #   2. dict_strategy="collect" (default): one tiny isin-pruned
-    #      dictionary collect (terms table if present, else a (term, n)
-    #      postings scan) before the main action — measured FASTER p50
-    #      and p95 than the join strategy on local[32] (the dictionary
-    #      job is ~ms; a broadcast exchange costs more than it saves);
-    #   3. dict_strategy="join": broadcast the ≤ n query terms'
-    #      (term, df) rows onto the postings JVM-side and let the kernel
-    #      derive idf from the joined column — the WHOLE scored query is
-    #      then ONE Spark action with zero driver round-trips (the
-    #      reference's per-query dictionary seek happens inside its
-    #      query process too, index_reader.rs:200-269). The right shape
-    #      when driver→cluster latency dominates a small job's cost.
-    # The missing-term fast abort (query.rs:34-40) is explicit in 1/2;
-    # in 3 it falls out of the kernel's present-set check — a term
-    # absent from the dictionary joins away in every shard.
-    if term_dfs is not None:
-        dfs = {t: term_dfs[t] for t in multiplicity if t in term_dfs}
-        if len(dfs) < len(multiplicity):
-            return empty
-        terms_meta = {t: (dfs[t], m) for t, m in multiplicity.items()}
-    elif dict_strategy == "join" and seg.terms is not None:
-        from search_suite_spark.sources.segments import term_probe_predicate
-
-        q_dict = seg.terms.filter(
-            term_probe_predicate(seg.terms, list(multiplicity))
-        ).select("term", F.col("df").cast("long").alias("df"))
-        rows = rows.join(F.broadcast(q_dict), "term")
-        terms_meta = {t: (None, m) for t, m in multiplicity.items()}
-    else:
-        dfs = seg.term_dfs(list(multiplicity))
-        if len(dfs) < len(multiplicity):
-            return empty
-        terms_meta = {t: (dfs[t], m) for t, m in multiplicity.items()}
-
-    deleted, deletes_df = _route_deletes(seg, deletes_broadcast_max)
-
-    kernel = _shard_kernel(terms_meta, seg.num_docs, seg.avgdl, max_results)
-    if stats is not None:
-        acc_dec = stats["blocks_decoded"]
-        acc_tot = stats["blocks_total"]
-        inner = kernel
-
-        def kernel(pdf, deleted_ids, _inner=inner):
-            sd = _stats_dict()
-            d0, t0 = sd["blocks_decoded"], sd["blocks_total"]
-            out = _inner(pdf, deleted_ids)
-            acc_dec.add(sd["blocks_decoded"] - d0)
-            acc_tot.add(sd["blocks_total"] - t0)
-            return out
-
-    if deletes_df is None:
-        cands = rows.groupBy("shard").applyInPandas(
-            lambda pdf: kernel(pdf, deleted), RESULT_SCHEMA
+    _new_stats(spark, stats)
+    q_terms = sorted(set(normalise(query)))
+    if term_dfs is None:
+        term_dfs = seg.term_dfs(q_terms) if q_terms else {}
+    out = scored_candidates(
+        [seg], query, max_results, [term_dfs], deletes_broadcast_max, stats
+    )
+    if out is None:
+        return spark.createDataFrame(
+            [], "url string, score double, term_count int"
         )
-    else:
-        # large-deletes path: shard = pmod(doc_id, n_shards) is derivable
-        # from the delete's doc_id alone, so the deletes co-shuffle with
-        # the postings rows and each kernel sees only its shard's slice
-        from search_suite_spark.sources.segments import shard_of_doc_id
-
-        if seg.n_shards <= 0:
-            # pmod(doc_id, 0) yields nulls → deletes silently mis-shard
-            # and deleted docs come back. n_shards is lineage-derived
-            # (read_segment); a hand-built Segment must set it.
-            raise ValueError(
-                "cogrouped deletes need Segment.n_shards > 0 "
-                f"(got {seg.n_shards}); read the segment via read_segment "
-                "or raise deletes_broadcast_max"
-            )
-        del_sharded = deletes_df.withColumn(
-            "shard", shard_of_doc_id(seg.n_shards)
-        )
-
-        def cg(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            dead = np.sort(
-                right["doc_id"].to_numpy(dtype=np.int64).view(np.uint64)
-            )
-            return kernel(left, dead)
-
-        cands = (
-            rows.groupBy("shard")
-            .cogroup(del_sharded.groupBy("shard"))
-            .applyInPandas(cg, RESULT_SCHEMA)
-        )
-
-    # resolve urls BEFORE the global limit: each shard kernel already
-    # pruned to its local top-k (+ ties), so the join touches ≤ ~k·n_shards
-    # rows, and the k-boundary tie-break lands on url — a deterministic,
-    # externally-reproducible order (the packed and flat paths then agree
-    # with the SQL oracle's ORDER BY score DESC, url even on exact ties).
-    # Broadcast the CANDIDATE side (r6): without the hint the planner
-    # either broadcasts the whole docs table (rebuilt per query — 25 MB
-    # at 500k docs) or, past the auto-broadcast threshold, sort-merges —
-    # shuffling the docs table per query. Candidates are k·n_shards plus
-    # θ-ties (a degenerate all-tied corpus could inflate this; such a
-    # corpus breaks the unhinted plan's docs shuffle just as hard).
-    # Measured at 500k docs: cold p50 0.86-1.01 s → 0.68-0.70 s.
-    # Unbounded result sets (max_results=None) keep the planner's choice.
-    if max_results is not None:
-        cands = F.broadcast(cands)
-    out = cands.join(seg.docs.select("doc_id", "url"), "doc_id")
     if max_results is not None:
         out = out.orderBy(F.col("score").desc(), F.col("url")).limit(max_results)
     return (
@@ -792,8 +813,8 @@ def wand_partial(
     it). A doc qualifies when ≥ ``min_should_match`` DISTINCT query
     terms match; the score sums every matched instance. Terms absent
     from the dictionary simply don't match (no conjunctive fast abort —
-    disjunctive semantics). Same shard scatter/gather + deletes routing
-    as wand_scored; candidate generation is the full union of present
+    disjunctive semantics). Same scatter/gather as wand_scored
+    (_scatter); candidate generation is the full union of present
     terms' id lists (the disjunctive floor), exact scoring stays
     θ-pruned in upper-bound order."""
     spark = seg.postings.sparkSession
@@ -816,7 +837,6 @@ def wand_partial(
         return empty
     idfs = {t: _idf(seg.num_docs, df) for t, (df, _) in terms_meta.items()}
     rows = seg.postings.filter(F.col("term").isin(list(terms_meta)))
-    deleted, deletes_df = _route_deletes(seg, deletes_broadcast_max)
     avgdl, k, mm = seg.avgdl, max_results, min_should_match
 
     def kernel(pdf: pd.DataFrame, deleted_ids: np.ndarray) -> pd.DataFrame:
@@ -828,39 +848,10 @@ def wand_partial(
             lists, {}, terms_meta, idfs, avgdl, k, mm, deleted_ids
         )
 
-    if deletes_df is None:
-        cands = rows.groupBy("shard").applyInPandas(
-            lambda pdf: kernel(pdf, deleted), PARTIAL_RESULT_SCHEMA
-        )
-    else:
-        from search_suite_spark.sources.segments import shard_of_doc_id
-
-        if seg.n_shards <= 0:
-            raise ValueError(
-                "cogrouped deletes need Segment.n_shards > 0 "
-                f"(got {seg.n_shards}); read the segment via read_segment "
-                "or raise deletes_broadcast_max"
-            )
-        del_sharded = deletes_df.withColumn(
-            "shard", shard_of_doc_id(seg.n_shards)
-        )
-
-        def cg(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            dead = np.sort(
-                right["doc_id"].to_numpy(dtype=np.int64).view(np.uint64)
-            )
-            return kernel(left, dead)
-
-        cands = (
-            rows.groupBy("shard")
-            .cogroup(del_sharded.groupBy("shard"))
-            .applyInPandas(cg, PARTIAL_RESULT_SCHEMA)
-        )
-
-    # candidate-side broadcast for the url resolve — see wand_scored
-    if max_results is not None:
-        cands = F.broadcast(cands)
-    out = cands.join(seg.docs.select("doc_id", "url"), "doc_id")
+    out = _scatter(
+        [(seg, rows, kernel)], PARTIAL_RESULT_SCHEMA, deletes_broadcast_max,
+        broadcast_cands=max_results is not None,
+    )
     if max_results is not None:
         out = out.orderBy(
             F.col("score").desc(), F.col("url")
@@ -924,9 +915,7 @@ def bm25_batch(
     deterministically (see _attach_release).
     """
     spark = seg.postings.sparkSession
-    if stats is not None:
-        stats["blocks_decoded"] = spark.sparkContext.accumulator(0)
-        stats["blocks_total"] = spark.sparkContext.accumulator(0)
+    _new_stats(spark, stats)
     empty = _attach_release(
         spark.createDataFrame(
             [], "qid string, url string, score double, term_count int"
@@ -937,9 +926,8 @@ def bm25_batch(
     all_terms = sorted({t for m in multis.values() for t in m})
     if not all_terms:
         return empty
-    # term_dfs: a collection caller batched every segment's dictionary
-    # lookups into one job (registry.collection_term_dfs) — same seam as
-    # wand_scored's
+    # term_dfs: a collection caller probed every segment's dictionary
+    # up front (registry.collection_term_dfs) — same seam as wand_scored's
     dfs = (
         {t: term_dfs[t] for t in all_terms if t in term_dfs}
         if term_dfs is not None
@@ -958,7 +946,6 @@ def bm25_batch(
     live_terms = sorted({t for qm in queries_meta.values() for t in qm})
     rows = seg.postings.filter(F.col("term").isin(live_terms))
 
-    deleted, deletes_df = _route_deletes(seg, deletes_broadcast_max)
     # idf is a pure function of (n_docs, df): precompute once, ship with
     # the metadata in ONE broadcast (not the task closure — see
     # _batch_shard_kernel)
@@ -971,53 +958,14 @@ def bm25_batch(
     kernel = _batch_shard_kernel(
         meta_bc, seg.num_docs, seg.avgdl, max_results
     )
-    if stats is not None:
-        acc_dec = stats["blocks_decoded"]
-        acc_tot = stats["blocks_total"]
-        inner = kernel
-
-        def kernel(pdf, deleted_ids, _inner=inner):
-            sd = _stats_dict()
-            d0, t0 = sd["blocks_decoded"], sd["blocks_total"]
-            out = _inner(pdf, deleted_ids)
-            acc_dec.add(sd["blocks_decoded"] - d0)
-            acc_tot.add(sd["blocks_total"] - t0)
-            return out
-
-    if deletes_df is None:
-        cands = rows.groupBy("shard").applyInPandas(
-            lambda pdf: kernel(pdf, deleted), BATCH_RESULT_SCHEMA
-        )
-    else:
-        from search_suite_spark.sources.segments import shard_of_doc_id
-
-        if seg.n_shards <= 0:
-            raise ValueError(
-                "cogrouped deletes need Segment.n_shards > 0 "
-                f"(got {seg.n_shards}); read the segment via read_segment "
-                "or raise deletes_broadcast_max"
-            )
-        del_sharded = deletes_df.withColumn(
-            "shard", shard_of_doc_id(seg.n_shards)
-        )
-
-        def cg(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            dead = np.sort(
-                right["doc_id"].to_numpy(dtype=np.int64).view(np.uint64)
-            )
-            return kernel(left, dead)
-
-        cands = (
-            rows.groupBy("shard")
-            .cogroup(del_sharded.groupBy("shard"))
-            .applyInPandas(cg, BATCH_RESULT_SCHEMA)
-        )
-
     # per-shard kernels already pruned each query to its local top-k
     # (+ θ-ties), so the docs join touches ≤ ~k·n_shards rows per query;
     # the per-qid global top-k is a row_number window with the same
     # score-then-url tie-break as the single-query path
-    out = cands.join(seg.docs.select("doc_id", "url"), "doc_id")
+    out = _scatter(
+        [(seg, rows, kernel)], BATCH_RESULT_SCHEMA, deletes_broadcast_max,
+        broadcast_cands=False, stats=stats,
+    )
     if max_results is not None:
         from pyspark.sql import Window
 

@@ -113,7 +113,8 @@ def index_into_collection(
     if segment_name is not None:
         _write_batch_marker(col_dir, name)
     if compact:
-        compact_collection(spark, col_dir, n_shards=n_shards)
+        # compaction ends by loading the collection at its fixpoint
+        return compact_collection(spark, col_dir, n_shards=n_shards)
     return load_collection(spark, col_dir)
 
 
@@ -239,40 +240,15 @@ def collection_doc_status(
 def collection_term_dfs(
     seg_list: list[Segment], terms: list[str]
 ) -> list[dict[str, int]]:
-    """Batched Q1 dictionary lookup across segments: ONE tagged-union
-    job covering every segment's (term, df) rows for the query terms,
-    instead of one driver round-trip per segment (the reference fans the
-    per-segment lookups out concurrently, QueryProcessor.hs:72; Spark's
-    equivalent of concurrency here is a single union plan). Returns one
-    {term: df} dict per segment, positionally."""
-    out: list[dict[str, int]] = [{} for _ in seg_list]
-    if not terms or not seg_list:
-        return out
-    from search_suite_spark.sources.segments import term_probe_predicate
-
-    parts = []
-    for i, s in enumerate(seg_list):
-        src = (
-            s.terms.filter(term_probe_predicate(s.terms, terms))
-            .select("term", "df")
-            if s.terms is not None
-            else s.postings.filter(F.col("term").isin(terms))
-            .groupBy("term")
-            .agg(F.sum("n").alias("df"))
-        )
-        parts.append(
-            src.select(
-                F.lit(i).alias("_seg"),
-                "term",
-                F.col("df").cast("long").alias("df"),
-            )
-        )
-    allr = parts[0]
-    for p in parts[1:]:
-        allr = allr.unionByName(p)
-    for r in allr.collect():
-        out[r["_seg"]][r["term"]] = int(r["df"])
-    return out
+    """Q1 dictionary lookup across segments → one {term: df} dict per
+    segment, positionally. Read segments probe their dictionaries on
+    the driver (Segment.term_dfs → TermDictionary), so the whole lookup
+    submits no Spark job; the reference fans the per-segment lookups
+    out concurrently instead (QueryProcessor.hs:72). A hand-built
+    Segment without a dictionary pays its own postings scan."""
+    if not terms:
+        return [{} for _ in seg_list]
+    return [s.term_dfs(terms) for s in seg_list]
 
 
 def query_collection(
@@ -281,36 +257,35 @@ def query_collection(
     max_results: int | None = 10,
 ) -> DataFrame:
     """Scored query across all segments (Q12, QueryProcessor.hs:61-152):
-    per-segment top-k with segment-local stats, then a global merge that
+    every segment scored with its own stats, then a global merge that
     dedupes urls keeping the max score and re-sorts by exact score.
 
-    Driver round-trips are batched: all segments' dictionary lookups run
-    as ONE tagged-union job (collection_term_dfs — measured faster than
-    per-segment broadcast dictionary joins, see wand_scored's
-    dict_strategy note), and the deletes-volume routing reads each
-    segment's metadata hint — an N-segment collection pays one
-    dictionary job + one result job per query, not N+1 sequential
-    submits."""
+    The dictionary probe and delete routing read metadata the segments
+    resolved when they were read (no Spark job), and every segment is
+    scored in ONE scatter (wand.scored_candidates — the same skeleton
+    wand_scored runs on one segment): an N-segment collection pays one
+    result action per query, not N+1 sequential submits. The global
+    top-k needs no per-segment cut: a url outside its segment's top-k
+    has k urls ahead of it in the merged ranking too."""
     from search_suite_spark.functions.normalise import normalise
-    from search_suite_spark.operators.wand import wand_scored
+    from search_suite_spark.operators.wand import scored_candidates
 
     seg_list = list(segs.values()) if isinstance(segs, dict) else list(segs)
     if not seg_list:
         raise ValueError("empty collection")
     q_terms = sorted(set(normalise(query)))
-    dfs_list = collection_term_dfs(seg_list, q_terms)
-    parts = [
-        wand_scored(s, query, max_results=max_results, term_dfs=dfs_list[i])
-        for i, s in enumerate(seg_list)
-    ]
-    allr = parts[0]
-    for p in parts[1:]:
-        allr = allr.unionByName(p)
+    allr = scored_candidates(
+        seg_list, query, max_results, collection_term_dfs(seg_list, q_terms)
+    )
+    if allr is None:
+        return seg_list[0].postings.sparkSession.createDataFrame(
+            [], "url string, score double, term_count int"
+        )
     w = W.partitionBy("url").orderBy(F.col("score").desc())
     out = (
         allr.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .drop("_rn")
+        .select("url", "score", "term_count")
         .orderBy(F.col("score").desc(), F.col("url"))
     )
     if max_results is not None:
@@ -329,9 +304,10 @@ def query_collection_batch(
     re-sort + limit — each qid's rows identical to
     ``query_collection(segs, queries[qid])``.
 
-    The N-segments × M-queries workload costs ONE batched dictionary job
-    + ONE result job total (the reference answers this shape with one
-    process per segment per query, QueryProcessor.hs:72).
+    The N-segments × M-queries workload costs ONE result job total: the
+    dictionary probes run on the driver (collection_term_dfs), and the
+    reference answers this shape with one process per segment per query
+    (QueryProcessor.hs:72).
 
     The returned frame carries ``ss_release()`` (see wand._attach_release):
     serving loops call it after their action to drop the per-segment
@@ -395,9 +371,9 @@ def query_collection_partial(
     counterpart to mirror — semantics follow query_collection's
     max-score url merge).
 
-    Same driver-round-trip shape as query_collection: ONE tagged-union
-    dictionary job for all segments (collection_term_dfs), then one
-    result job — N segments never cost N sequential submits."""
+    Same driver-round-trip shape as query_collection: driver-side
+    dictionary probes (collection_term_dfs), then one result job — N
+    segments never cost N sequential submits."""
     from search_suite_spark.functions.normalise import normalise
     from search_suite_spark.operators.wand import wand_partial
 

@@ -83,13 +83,24 @@ class SegmentIO:
     def read_deletes(self, spark: SparkSession, seg_dir: str) -> DataFrame | None:
         raise NotImplementedError
 
-    def deletes_count(self, spark: SparkSession, seg_dir: str) -> int | None:
-        """Cheap ROW-COUNT upper bound for the deletes table (e.g. from
-        parquet footers / catalog stats — no Spark job). None = unknown;
-        queries then fall back to a count() job. Used to route between
-        the broadcast and cogrouped delete-filter paths (operators/wand)
-        without a per-query driver round-trip."""
+    def table_files(self, seg_dir: str, table: str) -> list[str] | None:
+        """The parquet data files of one table of the segment, listed
+        driver-side (no Spark job; [] when the table does not exist).
+        Every driver-side metadata read below — footer schemas, deletes
+        counts and ids, lineage totals, dictionary probes — goes through
+        this listing. None = the files are not readable from the driver
+        (e.g. an object store without a local view): callers then fall
+        back to Spark reads."""
         return None
+
+    def deletes_count(self, spark: SparkSession, seg_dir: str) -> int | None:
+        """Cheap ROW-COUNT upper bound for the deletes table (parquet
+        footers / catalog stats — no Spark job). None = unknown; queries
+        then fall back to a count() job. Used to route between the
+        broadcast and cogrouped delete-filter paths (operators/wand)
+        without a per-query driver round-trip."""
+        files = self.table_files(seg_dir, "deletes")
+        return None if files is None else _footer_row_count(files)
 
     def lineage_summary(
         self, spark: SparkSession, seg_dir: str
@@ -102,7 +113,8 @@ class SegmentIO:
         of rows; read_segment runs after EVERY build/merge, making that
         submit a fixed tail on every timed build. None = unknown →
         read_segment falls back to the Spark aggregation."""
-        return None
+        files = self.table_files(seg_dir, "lineage")
+        return None if files is None else _lineage_summary_of_files(files)
 
     def lineage_shards(
         self, spark: SparkSession, seg_dir: str
@@ -111,7 +123,8 @@ class SegmentIO:
         resume contract), from driver-side file reads — no Spark job.
         None = unknown → completed_shards falls back to a distributed
         read."""
-        return None
+        files = self.table_files(seg_dir, "lineage")
+        return None if files is None else _lineage_shards_of_files(files)
 
 
 def _shard_write_partitioned(df, salt_col, n_shards):
@@ -211,105 +224,138 @@ class ParquetSegmentIO(SegmentIO):
         )
 
     def read_docs(self, spark: SparkSession, seg_dir: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(seg_dir, "docs"))
+        # shard is the hive partition column: not in the file footers,
+        # appended last with the type partition inference would give it
+        return _read_declared(
+            spark, self.table_files(seg_dir, "docs"),
+            [os.path.join(seg_dir, "docs")], partition_col="shard",
+        )
 
     def read_lineage(self, spark: SparkSession, seg_dir: str) -> DataFrame:
         return spark.read.parquet(os.path.join(seg_dir, "lineage"))
 
     def read_terms(self, spark: SparkSession, seg_dir: str) -> DataFrame | None:
         path = os.path.join(seg_dir, "terms")
-        return spark.read.parquet(path) if os.path.isdir(path) else None
-
-    def read_deletes(self, spark: SparkSession, seg_dir: str) -> DataFrame | None:
-        path = os.path.join(seg_dir, "deletes")
         if not os.path.isdir(path):
             return None
-        try:
-            return spark.read.parquet(path)
-        except Exception:
+        return _read_declared(spark, self.table_files(seg_dir, "terms"), [path])
+
+    def read_deletes(self, spark: SparkSession, seg_dir: str) -> DataFrame | None:
+        files = self.table_files(seg_dir, "deletes")
+        if not files:
             return None
+        return _read_declared(spark, files, [os.path.join(seg_dir, "deletes")])
 
-    def deletes_count(self, spark: SparkSession, seg_dir: str) -> int | None:
-        return _footer_row_count(os.path.join(seg_dir, "deletes"))
-
-    def lineage_summary(
-        self, spark: SparkSession, seg_dir: str
-    ) -> tuple[int, int, int] | None:
-        return _lineage_summary_of_dirs([os.path.join(seg_dir, "lineage")])
-
-    def lineage_shards(
-        self, spark: SparkSession, seg_dir: str
-    ) -> set[int] | None:
-        return _lineage_shards_of_dirs([os.path.join(seg_dir, "lineage")])
+    def table_files(self, seg_dir: str, table: str) -> list[str] | None:
+        return _parquet_files([os.path.join(seg_dir, table)])
 
 
-def _lineage_shards_of_dirs(dirs: list[str]) -> set[int]:
-    """Driver-side distinct shard ids over the lineage parquet files
-    under ``dirs`` — pyarrow column reads, no Spark job."""
+# Spark stores the schema it wrote in every parquet footer under this key
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _read_declared(
+    spark: SparkSession, files: list[str] | None, paths: list[str],
+    partition_col: str | None = None,
+) -> DataFrame:
+    """spark.read.parquet(*paths) with the schema DECLARED from the
+    table's own footer, so opening a table submits no schema-inference
+    job (Spark's inference reads footers through a distributed job on
+    every open). The declared schema is what inference would return:
+    the writer's Spark schema, all columns nullable (file sources read
+    every column as nullable), plus ``partition_col`` as an int hive
+    partition column. Falls back to inference when no footer carries a
+    Spark schema."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    meta = (pq.read_schema(files[0]).metadata or {}) if files else {}
+    raw = meta.get(_SPARK_SCHEMA_KEY)
+    if raw is None:
+        return spark.read.parquet(*paths)
+    fields = [
+        StructField(f.name, f.dataType, True)
+        for f in StructType.fromJson(json.loads(raw)).fields
+    ]
+    if partition_col is not None:
+        fields.append(StructField(partition_col, IntegerType(), True))
+    return spark.read.schema(StructType(fields)).parquet(*paths)
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file index skips these names (InMemoryFileIndex
+    shouldFilterOutPathName): ``_temporary``/``_SUCCESS`` and other
+    ``_`` names except ``col=value`` partition dirs, ``.`` names such as
+    ``.spark-staging-*``, and in-flight ``._COPYING_`` copies."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _parquet_files(dirs: list[str]) -> list[str]:
+    """Every parquet data file under ``dirs`` that a Spark read of the
+    same dirs sees, sorted — a driver-side listing, no Spark job. Hidden
+    paths (a running or dead writer's ``_temporary`` attempt files,
+    staging dirs) are skipped like Spark skips them, so driver-side
+    metadata never counts rows Spark's view of the table lacks. Missing
+    dirs contribute nothing."""
+    out: list[str] = []
+    for d in dirs:
+        for root, subdirs, files in os.walk(d):
+            subdirs[:] = [s for s in subdirs if not _hidden(s)]
+            out.extend(
+                os.path.join(root, f) for f in files
+                if f.endswith(".parquet") and not _hidden(f)
+            )
+    return sorted(out)
+
+
+def _lineage_shards_of_files(files: list[str]) -> set[int]:
+    """Driver-side distinct shard ids over lineage parquet files —
+    pyarrow column reads, no Spark job."""
     import pyarrow.parquet as pq
 
     shards: set[int] = set()
-    for d in dirs:
-        if not os.path.isdir(d):
-            continue
-        for root, _, files in os.walk(d):
-            for f in files:
-                if not f.endswith(".parquet"):
-                    continue
-                t = pq.read_table(os.path.join(root, f), columns=["shard"])
-                shards.update(
-                    int(s) for s in t.column("shard").to_pylist()
-                    if s is not None
-                )
+    for f in files:
+        t = pq.read_table(f, columns=["shard"])
+        shards.update(
+            int(s) for s in t.column("shard").to_pylist() if s is not None
+        )
     return shards
 
 
-def _lineage_summary_of_dirs(dirs: list[str]) -> tuple[int, int, int]:
-    """Driver-side (Σ n_docs, Σ total_doc_len, max shard) over the
-    lineage parquet files under ``dirs`` — pyarrow column reads, no
-    Spark job. Missing dirs/files behave like an empty table."""
+def _lineage_summary_of_files(files: list[str]) -> tuple[int, int, int]:
+    """Driver-side (Σ n_docs, Σ total_doc_len, max shard) over lineage
+    parquet files — pyarrow column reads, no Spark job. No files behave
+    like an empty table."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     nd = tdl = 0
     max_shard = -1
-    for d in dirs:
-        if not os.path.isdir(d):
+    for f in files:
+        t = pq.read_table(f, columns=["shard", "n_docs", "total_doc_len"])
+        if t.num_rows == 0:
             continue
-        for root, _, files in os.walk(d):
-            for f in files:
-                if not f.endswith(".parquet"):
-                    continue
-                t = pq.read_table(
-                    os.path.join(root, f),
-                    columns=["shard", "n_docs", "total_doc_len"],
-                )
-                if t.num_rows == 0:
-                    continue
-                import pyarrow.compute as pc
-
-                nd += pc.sum(t.column("n_docs")).as_py() or 0
-                tdl += pc.sum(t.column("total_doc_len")).as_py() or 0
-                mx = pc.max(t.column("shard")).as_py()
-                if mx is not None and mx > max_shard:
-                    max_shard = mx
+        nd += pc.sum(t.column("n_docs")).as_py() or 0
+        tdl += pc.sum(t.column("total_doc_len")).as_py() or 0
+        mx = pc.max(t.column("shard")).as_py()
+        if mx is not None and mx > max_shard:
+            max_shard = mx
     return nd, tdl, max_shard
 
 
-def _footer_row_count(table_dir: str) -> int:
-    """Sum parquet-footer num_rows under a directory — driver-side file
-    metadata only, no Spark job (the Iceberg analogue is a snapshot
-    summary read). Counts rows, not distinct keys: callers use it as an
-    upper bound."""
+def _footer_row_count(files: list[str]) -> int:
+    """Sum of parquet-footer num_rows — driver-side file metadata only,
+    no Spark job (the Iceberg analogue is a snapshot summary read).
+    Counts rows, not distinct keys: callers use it as an upper bound."""
     import pyarrow.parquet as pq
 
-    if not os.path.isdir(table_dir):
-        return 0
-    n = 0
-    for root, _, files in os.walk(table_dir):
-        for f in files:
-            if f.endswith(".parquet"):
-                n += pq.read_metadata(os.path.join(root, f)).num_rows
-    return n
+    return sum(pq.read_metadata(f).num_rows for f in files)
 
 
 class ManifestSegmentIO(SegmentIO):
@@ -460,8 +506,9 @@ class ManifestSegmentIO(SegmentIO):
             raise FileNotFoundError(
                 f"no manifest for table {table!r} under {seg_dir}"
             )
-        reader = spark.read.schema(schema) if schema else spark.read
-        return reader.parquet(*paths)
+        if schema:
+            return spark.read.schema(schema).parquet(*paths)
+        return _read_declared(spark, _parquet_files(paths), paths)
 
     def write_postings(
         self, df: DataFrame, seg_dir: str, mode: str,
@@ -509,48 +556,16 @@ class ManifestSegmentIO(SegmentIO):
         return self._read(spark, seg_dir, "lineage")
 
     def read_terms(self, spark: SparkSession, seg_dir: str) -> DataFrame | None:
-        try:
-            paths = self._live_paths(seg_dir, "terms")
-        except FileNotFoundError:
-            return None
-        if not paths:
-            return None
-        return spark.read.parquet(*paths)
+        paths = self._live_paths(seg_dir, "terms")
+        return self._read(spark, seg_dir, "terms") if paths else None
 
     def read_deletes(self, spark: SparkSession, seg_dir: str) -> DataFrame | None:
         paths = self._live_paths(seg_dir, "deletes")
-        if not paths:
-            return None
-        try:
-            return spark.read.parquet(*paths)
-        except Exception:
-            return None
+        files = _parquet_files(paths)
+        return _read_declared(spark, files, paths) if files else None
 
-    def deletes_count(self, spark: SparkSession, seg_dir: str) -> int | None:
-        import pyarrow.parquet as pq
-
-        n = 0
-        for p in self._live_paths(seg_dir, "deletes"):
-            n += _footer_row_count(p) if os.path.isdir(p) else 0
-        return n
-
-    def lineage_summary(
-        self, spark: SparkSession, seg_dir: str
-    ) -> tuple[int, int, int] | None:
-        try:
-            paths = self._live_paths(seg_dir, "lineage")
-        except FileNotFoundError:
-            return (0, 0, -1)
-        return _lineage_summary_of_dirs([p for p in paths if os.path.isdir(p)])
-
-    def lineage_shards(
-        self, spark: SparkSession, seg_dir: str
-    ) -> set[int] | None:
-        try:
-            paths = self._live_paths(seg_dir, "lineage")
-        except FileNotFoundError:
-            return set()
-        return _lineage_shards_of_dirs([p for p in paths if os.path.isdir(p)])
+    def table_files(self, seg_dir: str, table: str) -> list[str] | None:
+        return _parquet_files(self._live_paths(seg_dir, table))
 
 
 DEFAULT_IO: SegmentIO = ParquetSegmentIO()

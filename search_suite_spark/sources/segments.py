@@ -314,8 +314,124 @@ def _pack_stream_arrow(
     return go
 
 
+# above this many delete rows a segment's deleted ids are never read to
+# the driver: queries shard-partition the deletes table and cogroup it
+# into the shard kernels instead (compaction garbage-collects deletes,
+# so most segments sit far below this; the cap is a driver-OOM guard
+# for delete-heavy workloads)
+DELETES_BROADCAST_MAX = 1 << 16
+
+
+class TermDictionary:
+    """Driver-side point lookups into a segment's terms table
+    (term, df [, tlen]) — pyarrow reads, no Spark job (the Q1 dictionary
+    seek, index_reader.rs:200-269).
+
+    The table is written (tlen, term)-clustered (write_terms), so each
+    row group's min/max statistics bound both columns and a probe reads
+    only the row groups whose ranges can hold one of its words. The
+    footers are read once, when the segment is read; older tables
+    without tlen prune on term alone."""
+
+    def __init__(self, files: list[str]):
+        import pyarrow.parquet as pq
+
+        self._files = []
+        for f in files:
+            md = pq.read_metadata(f)
+            cols = {
+                md.schema.column(j).name: j for j in range(md.num_columns)
+            }
+            bounds = [
+                {
+                    name: _min_max(md.row_group(g).column(cols[name]))
+                    for name in ("term", "tlen")
+                    if name in cols
+                }
+                for g in range(md.num_row_groups)
+            ]
+            self._files.append((f, md, bounds))
+
+    def dfs(self, words: list[str]) -> dict[str, int]:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        words = sorted(set(words))
+        out: dict[str, int] = {}
+        if not words:
+            return out
+        for f, md, bounds in self._files:
+            groups = [
+                g for g, b in enumerate(bounds)
+                if any(_may_hold(b, w) for w in words)
+            ]
+            if not groups:
+                continue
+            t = pq.ParquetFile(f, metadata=md).read_row_groups(
+                groups, columns=["term", "df"]
+            )
+            t = t.filter(pc.is_in(t.column("term"), value_set=pa.array(words)))
+            out.update(zip(t.column("term").to_pylist(),
+                           (int(x) for x in t.column("df").to_pylist())))
+        return out
+
+
+def _min_max(chunk):
+    st = chunk.statistics
+    if st is None or not st.has_min_max:
+        return None
+    return st.min, st.max
+
+
+def _may_hold(bounds: dict, word: str) -> bool:
+    """False only when a row group's statistics exclude ``word``."""
+    tl = bounds.get("tlen")
+    if tl is not None and not tl[0] <= len(word) <= tl[1]:
+        return False
+    tm = bounds.get("term")
+    if tm is not None and isinstance(tm[0], str) and isinstance(tm[1], str):
+        return tm[0] <= word <= tm[1]
+    return True
+
+
+def _read_ids(files: list[str]) -> np.ndarray:
+    """Distinct doc ids of parquet files as a uint64-sorted array (the
+    order the shard kernels binary-search in) — a pyarrow read on the
+    driver, no Spark job."""
+    import pyarrow.parquet as pq
+
+    parts = [
+        pq.read_table(f, columns=["doc_id"]).column("doc_id")
+        .to_numpy(zero_copy_only=False).astype(np.int64)
+        for f in files
+    ]
+    ids = np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
+    return np.unique(ids.view(np.uint64))
+
+
+def collect_ids_capped(df: DataFrame, limit: int) -> np.ndarray | None:
+    """Collect a (small) doc_id column to the driver as a uint64-sorted
+    array, or None when it exceeds ``limit`` rows — one Spark job that
+    never pulls more than ``limit`` + 1 rows."""
+    rows = df.limit(limit + 1).collect()
+    if len(rows) > limit:
+        return None
+    return np.unique(
+        np.array([r[0] for r in rows], dtype=np.int64).view(np.uint64)
+    )
+
+
 @dataclass
 class Segment:
+    """A read snapshot of a segment directory (read_segment).
+
+    The query metadata — segment totals, the deleted ids and the
+    dictionary's footers — is resolved once, when the segment is read,
+    so queries submit no planning jobs. A Segment therefore does not see
+    later writes to its directory: after delete_url (or any other write)
+    read the segment again."""
+
     path: str
     postings: DataFrame
     docs: DataFrame
@@ -327,18 +443,26 @@ class Segment:
     # row-count upper bound for deletes (parquet footers, no Spark job);
     # None = unknown → queries fall back to a count() job
     n_deletes_hint: int | None = None
+    # distinct deleted doc ids, uint64-sorted, read on the driver when
+    # the hint is within DELETES_BROADCAST_MAX; None = not resolved:
+    # over the cap (hint set) → queries cogroup the deletes table; no
+    # hint (hand-built Segment) → one capped collect (wand._route_deletes)
+    deleted_ids: np.ndarray | None = None
+    # driver-side dictionary probe; None → a Spark scan of the postings
+    dictionary: TermDictionary | None = None
 
     @property
     def avgdl(self) -> int:
         return self.total_doc_len // self.num_docs  # ranking.rs:50 parity
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
-        """Global doc_freq per term (Q1 dictionary lookup). Reads the
-        small terms table when present; falls back to a 2-column
-        (term, n) scan of the packed postings."""
-        if self.terms is not None:
-            src = self.terms.filter(term_probe_predicate(self.terms, terms))
-            return {r["term"]: int(r["df"]) for r in src.collect()}
+        """Global doc_freq per term (Q1 dictionary lookup). A read
+        segment probes its dictionary on the driver; a Segment without
+        one (hand-built, or a backend whose files the driver cannot
+        read) pays a 2-column (term, n) scan of the packed postings —
+        the terms table is groupBy(term).sum(n) of the same rows."""
+        if self.dictionary is not None:
+            return self.dictionary.dfs(terms)
         rows = (
             self.postings.filter(F.col("term").isin(terms))
             .groupBy("term")
@@ -740,6 +864,17 @@ def read_segment(
         summary = (int(row["nd"]), int(row["tdl"]), int(row["max_shard"]))
     deletes = io.read_deletes(spark, seg_dir)
     terms = io.read_terms(spark, seg_dir)
+    # query metadata, resolved once per snapshot on the driver (see
+    # Segment): deleted ids within the broadcast cap, dictionary footers
+    hint = io.deletes_count(spark, seg_dir) if deletes is not None else 0
+    deleted_ids = None
+    if deletes is None:
+        deleted_ids = np.empty(0, dtype=np.uint64)
+    elif hint is not None and hint <= DELETES_BROADCAST_MAX:
+        files = io.table_files(seg_dir, "deletes")
+        if files is not None:
+            deleted_ids = _read_ids(files)
+    term_files = io.table_files(seg_dir, "terms") if terms is not None else None
     return Segment(
         path=seg_dir,
         postings=postings,
@@ -749,9 +884,9 @@ def read_segment(
         deletes=deletes,
         terms=terms,
         n_shards=int(summary[2]) + 1,
-        n_deletes_hint=(
-            io.deletes_count(spark, seg_dir) if deletes is not None else 0
-        ),
+        n_deletes_hint=hint,
+        deleted_ids=deleted_ids,
+        dictionary=TermDictionary(term_files) if term_files else None,
     )
 
 
@@ -797,7 +932,9 @@ def dump_segment(seg: Segment, n_terms: int = 20) -> str:
 def delete_url(
     spark: SparkSession, seg: Segment, url: str, io: SegmentIO | None = None
 ) -> None:
-    """Append the url's doc_id to the segment's deletes table (Q17)."""
+    """Append the url's doc_id to the segment's deletes table (Q17).
+    ``seg`` is a snapshot: queries see the delete only through a segment
+    read again after this call (read_segment / load_collection)."""
     io = io or current_io()
     ids = seg.docs.filter(F.col("url") == url).select("doc_id")
     io.append_deletes(ids, seg.path)

@@ -145,8 +145,10 @@ def test_collection_doc_status_counts_across_segments(spark, tmp_path):
 
 
 def test_collection_term_dfs_single_batched_job(spark, tmp_path):
-    """The batched Q1 lookup must return each segment's own df values —
-    identical to per-segment term_dfs — in one tagged-union job."""
+    """The collection Q1 lookup must return each segment's own df values
+    — identical to per-segment term_dfs, whether the segment probes its
+    dictionary on the driver or (hand-built, no terms table) scans its
+    postings."""
     from search_suite_spark.sources.registry import collection_term_dfs
 
     col = str(tmp_path / "col4")

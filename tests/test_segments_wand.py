@@ -348,30 +348,100 @@ def test_deletes_hint_routes_without_count_job(spark, seg):
 
 
 def test_df_strategy_paths_agree(spark, seg):
-    """wand_scored's df-lookup strategies — caller-provided term_dfs,
-    the broadcast dictionary join (dict_strategy="join"), the default
-    terms-table collect, and the postings-scan collect (terms table
-    absent) — must return identical (url, score, term_count) rows,
-    including the duplicate-term multiplicity and the missing-term AND
-    abort (query.rs:34-40)."""
-    no_terms = type(seg)(
-        path=seg.path, postings=seg.postings, docs=seg.docs,
-        num_docs=seg.num_docs, total_doc_len=seg.total_doc_len,
-        deletes=seg.deletes, terms=None, n_shards=seg.n_shards,
-    )
-    for q in ["spark", "merge join", "spark spark merge", "spark zzznope"]:
-        dfs = seg.term_dfs(
-            sorted({t for t in q.split()})
+    """The dictionary probe — the driver-side TermDictionary read of the
+    terms table files — must return exactly what a Spark filter of
+    seg.terms returns, and wand_scored must give identical rows whichever
+    df source it uses: the driver probe (default), caller-provided
+    term_dfs, and the postings scan (no dictionary) — including
+    duplicate-term multiplicity and the missing-term AND abort
+    (query.rs:34-40)."""
+    from search_suite_spark.sources.segments import term_probe_predicate
+
+    assert seg.dictionary is not None
+    words = ["spark", "merge", "join", "the", "zzznope", "a", "spark"]
+    spark_rows = {
+        r["term"]: int(r["df"])
+        for r in seg.terms.filter(term_probe_predicate(seg.terms, words))
+        .collect()
+    }
+    assert seg.term_dfs(words) == spark_rows
+    assert "zzznope" not in spark_rows and "spark" in spark_rows
+
+    def variant(**kw):
+        fields = dict(
+            path=seg.path, postings=seg.postings, docs=seg.docs,
+            num_docs=seg.num_docs, total_doc_len=seg.total_doc_len,
+            deletes=seg.deletes, terms=seg.terms, n_shards=seg.n_shards,
+            n_deletes_hint=seg.n_deletes_hint, deleted_ids=seg.deleted_ids,
         )
-        via_join = wand_scored(seg, q, dict_strategy="join").collect()
-        via_default = wand_scored(seg, q).collect()
-        via_caller = wand_scored(seg, q, term_dfs=dfs).collect()
-        via_scan = wand_scored(no_terms, q).collect()
+        fields.update(kw)
+        return type(seg)(**fields)
+
+    no_dictionary = variant()  # → a Spark scan of the postings
+    for q in ["spark", "merge join", "spark spark merge", "spark zzznope"]:
+        dfs = seg.term_dfs(sorted(set(q.split())))
         key = lambda rows: sorted(
             (r["url"], round(r["score"], 9), r["term_count"]) for r in rows
         )
-        assert key(via_join) == key(via_default) == key(via_caller) == key(via_scan), q
+        got = [
+            key(wand_scored(seg, q).collect()),
+            key(wand_scored(seg, q, term_dfs=dfs).collect()),
+            key(wand_scored(no_dictionary, q).collect()),
+        ]
+        assert all(g == got[0] for g in got), q
     assert wand_scored(seg, "zzznope").count() == 0
+
+
+def test_term_dictionary_row_group_pruning(spark, tmp_path):
+    """TermDictionary over several files of several small row groups,
+    (tlen, term)-sorted like write_terms: every probe equals a Spark
+    filter of the same files (missing and repeated words included), and
+    the row-group statistics prune — a one-word probe reads far fewer
+    row groups than the table holds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from search_suite_spark.sources.segments import (
+        TermDictionary,
+        term_probe_predicate,
+    )
+
+    vocab = sorted({f"w{i * 7919 % 100003}" + "x" * (i % 5) for i in range(3000)})
+    files = []
+    for f in range(3):
+        part = sorted(vocab[f::3], key=lambda t: (len(t), t))
+        t = pa.table({
+            "term": part,
+            "df": pa.array([len(w) * 3 + f for w in part], pa.int64()),
+            "tlen": pa.array([len(w) for w in part], pa.int32()),
+        })
+        path = str(tmp_path / f"part-{f}.parquet")
+        pq.write_table(t, path, row_group_size=64)
+        files.append(path)
+    d = TermDictionary(files)
+    n_groups = sum(len(b) for _, _, b in d._files)
+    assert n_groups > 30
+    table = spark.read.parquet(*files)
+    probes = [
+        [vocab[0]],
+        [vocab[5], vocab[5], "nope", vocab[-1]],
+        ["", "zzzz", "w1"],
+        vocab[100:140],
+        [],
+    ]
+    for words in probes:
+        want = {
+            r["term"]: int(r["df"])
+            for r in table.filter(term_probe_predicate(table, words)).collect()
+        } if words else {}
+        assert d.dfs(words) == want, words
+    from search_suite_spark.sources.segments import _may_hold
+
+    touched = sum(
+        1 for _, _, bounds in d._files for b in bounds
+        if _may_hold(b, vocab[0])
+    )
+    assert touched <= 3
 
 
 def test_bm25_batch_matches_individual(spark, seg):
