@@ -1,7 +1,3 @@
-from search_suite_spark.functions.normalise import (
-    normalise,
-    tokenize_series,
-    tokenize_udf,
-)
+from search_suite_spark.functions.normalise import normalise
 
-__all__ = ["normalise", "tokenize_series", "tokenize_udf"]
+__all__ = ["normalise"]

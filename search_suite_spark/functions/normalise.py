@@ -18,8 +18,7 @@ golden cases /root/reference/indexer-qp2/test/normalise_tests.rs:7-81):
 
 The ASCII fast path is pure-regex; the general path is a per-char loop
 using ``unicodedata``.  Both are golden-tested against the Rust cases.
-Exposed to Spark as a vectorized Arrow ``pandas_udf`` (no per-row Python
-in the JVM boundary — one Arrow batch per invocation).
+Spark sees the same tokenizer as a Catalyst expression (tokens_column).
 """
 
 from __future__ import annotations
@@ -27,8 +26,6 @@ from __future__ import annotations
 import re
 import unicodedata
 from functools import lru_cache
-
-import pandas as pd
 
 _ASCII_RUNS = re.compile(r"[A-Za-z]+|[0-9]+")
 _ASCII_CAMEL = re.compile(r"(?<=[a-z])(?=[A-Z])")
@@ -116,27 +113,6 @@ def normalise(s: str) -> list[str]:
         # common web-text fast path: already-lowercase alnum + separators
         return _normalise_ascii(s)
     return _normalise_general(s)
-
-
-def tokenize_series(texts: pd.Series) -> pd.Series:
-    """Arrow-batch tokenizer: Series[str] -> Series[list[str]]."""
-    return texts.map(lambda s: normalise(s) if isinstance(s, str) else [])
-
-
-def tokenize_udf():
-    """Vectorized pandas UDF: string column -> array<string> of terms.
-
-    Defined lazily so importing this module never requires an active
-    SparkSession / JVM (the pure-python functions above are also used by
-    the pytest oracle).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def _tokenize(texts: pd.Series) -> pd.Series:
-        return tokenize_series(texts)
-
-    return _tokenize
 
 
 # ---------------------------------------------------------------------------

@@ -89,104 +89,6 @@ class InvertedIndex:
         return self.postings.join(F.broadcast(self.deletes), "doc_id", "left_anti")
 
 
-FLAT_TOKENS_SCHEMA = "doc_id long, term string, tf int, doc_len int"
-DOC_ROWS_SCHEMA = "doc_id long, url string, doc_len int"
-
-
-def _doc_counts(url, text):
-    counts: dict[str, int] = {}
-    for tok in normalise(url if isinstance(url, str) else ""):
-        counts[tok] = counts.get(tok, 0) + 1
-    for tok in normalise(text if isinstance(text, str) else ""):
-        counts[tok] = counts.get(tok, 0) + 1
-    return counts
-
-
-def flat_postings(pages: DataFrame) -> DataFrame:
-    """pages → flat posting rows (doc_id, term, tf, doc_len) in ONE
-    streaming mapInPandas pass — no nested array<struct> column, no
-    explode, no persist. At scale the build is memory-bandwidth-bound,
-    not CPU-bound: materializing per-doc token arrays (then exploding
-    them) doubles the bytes moved, so the tokenizer emits the exploded
-    relational form directly.
-
-    doc_id = xxhash64(url) is computed JVM-side *before* the UDF so the
-    Python side never hashes; the UDF sees (doc_id, url, text).
-    """
-    from collections.abc import Iterator
-
-    def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, terms, tfs, dls = [], [], [], []
-            for doc_id, url, text in zip(pdf["doc_id"], pdf["url"], pdf["text"]):
-                counts = _doc_counts(url, text)
-                dl = sum(counts.values())
-                for t, c in counts.items():
-                    ids.append(doc_id)
-                    terms.append(t)
-                    tfs.append(c)
-                    dls.append(dl)
-            yield pd.DataFrame(
-                {"doc_id": ids, "term": terms, "tf": tfs, "doc_len": dls}
-            )
-
-    return pages.select(
-        F.xxhash64("url").alias("doc_id"), "url", "text"
-    ).mapInPandas(go, FLAT_TOKENS_SCHEMA)
-
-
-def doc_rows(pages: DataFrame) -> DataFrame:
-    """pages → (doc_id, url, doc_len[, warc_ts]) in one streaming pass.
-
-    Re-tokenizes rather than reusing flat_postings' output: tokenize CPU
-    is trivial next to the cost of persisting an intermediate, so two
-    cheap passes beat one pass + a big cache (measured on local[32]).
-    warc_ts, when present, is carried through the batch (no join).
-    """
-    from collections.abc import Iterator
-
-    has_ts = "warc_ts" in pages.columns
-    schema = DOC_ROWS_SCHEMA + (", warc_ts timestamp" if has_ts else "")
-
-    def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dls = [
-                sum(_doc_counts(u, t).values())
-                for u, t in zip(pdf["url"], pdf["text"])
-            ]
-            out = {"doc_id": pdf["doc_id"], "url": pdf["url"], "doc_len": dls}
-            if has_ts:
-                out["warc_ts"] = pdf["warc_ts"]
-            yield pd.DataFrame(out)
-
-    cols = [F.xxhash64("url").alias("doc_id"), "url", "text"]
-    if has_ts:
-        cols.append("warc_ts")
-    return pages.select(*cols).mapInPandas(go, schema)
-
-
-def token_rows(pages: DataFrame) -> DataFrame:
-    """pages → exploded token instances (doc_id, doc_len, term) — the
-    JVM-only tokenize used by the packed build (segments.build_segment).
-
-    Runs entirely inside whole-stage codegen: xxhash64 + the Catalyst
-    tokenizer (functions.normalise.tokens_column) + size + explode. No
-    Python workers ⇒ one host core per task ⇒ linear core scaling (the
-    north_rule gate). tf is NOT pre-counted here: the pack kernel counts
-    it after the one shuffle, which deletes an entire groupBy exchange
-    from the build (token instances per (doc,term) land in the same
-    (shard, tbucket) group by construction).
-    """
-    return pages.select(
-        F.xxhash64("url").alias("doc_id"),
-        tokens_column(F.col("url"), F.col("text")).alias("toks"),
-    ).select(
-        "doc_id",
-        F.size("toks").alias("doc_len"),
-        F.explode("toks").alias("term"),
-    )
-
-
 def token_rows_with_doc(pages: DataFrame) -> DataFrame:
     """pages → exploded token instances (doc_id, doc_len, term) plus one
     null-term MARKER row per doc carrying ``-doc_len - 1`` — the
@@ -250,30 +152,6 @@ def token_rows_with_doc(pages: DataFrame) -> DataFrame:
         F.when(is_marker, -sz - 1).otherwise(sz).alias("doc_len"),
         "term",
     )
-
-
-def doc_attrs(pages: DataFrame) -> DataFrame:
-    """pages → (doc_id, url[, warc_ts]) — the column-pruned projection
-    the single-pass build joins onto kernel-emitted doc rows; never
-    touches the text column (Parquet column pruning keeps this scan
-    orders of magnitude cheaper than a tokenize pass)."""
-    cols = [F.xxhash64("url").alias("doc_id"), F.col("url")]
-    if "warc_ts" in pages.columns:
-        cols.append(F.col("warc_ts"))
-    return pages.select(*cols)
-
-
-def doc_rows_fast(pages: DataFrame) -> DataFrame:
-    """pages → (doc_id, url, doc_len[, warc_ts]) via the JVM tokenizer —
-    same output as doc_rows() but codegen'd end-to-end."""
-    cols = [
-        F.xxhash64("url").alias("doc_id"),
-        F.col("url"),
-        F.size(tokens_column(F.col("url"), F.col("text"))).alias("doc_len"),
-    ]
-    if "warc_ts" in pages.columns:
-        cols.append(F.col("warc_ts"))
-    return pages.select(*cols)
 
 
 def tokenized(pages: DataFrame) -> DataFrame:

@@ -41,8 +41,8 @@ def tokens_col(text_col="text"):
     calib_* keys)."""
     from search_suite_spark.functions.normalise import tokens_column
 
-    # null text → empty array (the Arrow twin's tokenize_series
-    # semantics; the raw Catalyst expr would propagate NULL)
+    # null text → empty array, as normalise treats a missing text; the
+    # raw Catalyst expr would propagate NULL
     return tokens_column(F.coalesce(F.col(text_col), F.lit("")))
 
 

@@ -23,8 +23,10 @@ The scale path of the query engine (SURVEY §2.5 Q4-Q7, north_rule):
           are never decoded.
   4. Global top-k = orderBy().limit(k) over ≤ ~k·n_shards candidate rows
      (TakeOrderedAndProject: per-partition heaps + driver merge — the
-     bounded-heap merge of Q7/Q12).
+     bounded-heap merge of Q7/Q12), or a per-qid window for many.
 
+Every scored packed query — conjunctive or min-should-match, one query
+or many, one segment or many — takes that path through query_segments.
 Deletions are filtered inside the shard kernel from a sorted id set
 (the docDeletions bitset analogue, see _scatter); corpus stats (N,
 avgdl, df) keep counting deleted docs, matching ranking.rs:48-50.
@@ -36,7 +38,8 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.broadcast import Broadcast
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from search_suite_spark.functions.normalise import normalise
@@ -53,8 +56,6 @@ from search_suite_spark.sources.segments import (
     collect_ids_capped,
     shard_of_doc_id,
 )
-
-RESULT_SCHEMA = "doc_id long, score double, term_count int"
 
 # observability hook: kernels accumulate (tf/dl blocks decoded, tf/dl
 # blocks total) here. ALWAYS access it through _stats_dict(): closures
@@ -75,10 +76,21 @@ def _idf(n_docs: int, df: float) -> float:
     return float(np.log((n_docs - df + 0.5) / (df + 0.5)))
 
 
-def _empty_result() -> pd.DataFrame:
-    return pd.DataFrame({"doc_id": [], "score": [], "term_count": []}).astype(
-        {"doc_id": "int64", "score": "float64", "term_count": "int32"}
+def _empty_result(count_col: str = "term_count") -> pd.DataFrame:
+    return pd.DataFrame({"doc_id": [], "score": [], count_col: []}).astype(
+        {"doc_id": "int64", "score": "float64", count_col: "int32"}
     )
+
+
+def _live(ids: np.ndarray, deleted_ids: np.ndarray) -> np.ndarray:
+    """Mask of the ``ids`` not in the sorted ``deleted_ids``."""
+    if not deleted_ids.size or not ids.size:
+        return np.ones(ids.size, dtype=bool)
+    pos = np.searchsorted(deleted_ids, ids)
+    ok = pos < deleted_ids.size
+    dead = np.zeros(ids.size, dtype=bool)
+    dead[ok] = deleted_ids[pos[ok]] == ids[ok]
+    return ~dead
 
 
 class _TermList:
@@ -251,12 +263,8 @@ def _single_term_topk(
         ids = np.concatenate([p[0] for p in parts])
         tfs = np.concatenate([p[1] for p in parts])
         dls = np.concatenate([p[2] for p in parts])
-        if deleted_ids.size and ids.size:
-            dead = np.searchsorted(deleted_ids, ids)
-            dead_ok = dead < deleted_ids.size
-            is_dead = np.zeros(ids.size, dtype=bool)
-            is_dead[dead_ok] = deleted_ids[dead[dead_ok]] == ids[dead_ok]
-            ids, tfs, dls = ids[~is_dead], tfs[~is_dead], dls[~is_dead]
+        alive = _live(ids, deleted_ids)
+        ids, tfs, dls = ids[alive], tfs[alive], dls[alive]
         if ids.size == 0:
             continue
         kept_ids.append(ids)
@@ -355,18 +363,17 @@ def _theta_pruned_topk(ub, k, score_chunk):
 
 
 def _score_conjunctive(lists, caches, terms_meta, idfs, avgdl, k, deleted_ids):
-    """Score ONE conjunctive query against a shard's decoded term lists.
+    """Score ONE conjunctive query against a shard's decoded term lists,
+    which hold every one of its terms (the kernel skips a query missing
+    one: empty AND).
 
-    lists/caches may cover a SUPERSET of this query's terms (the batch
-    kernel scores many queries against one shard decode; caches are
-    shared so a block decoded for one query is reused by the next).
+    lists/caches may cover a SUPERSET of this query's terms (a kernel
+    scoring many queries decodes the shard once; caches are shared so a
+    block decoded for one query is reused by the next).
     terms_meta: {term: (global_df, multiplicity)} for THIS query.
     Returns the kernel-local result frame (doc_id, score, term_count).
     """
     n_instances = sum(m for _, m in terms_meta.values())
-    if any(t not in lists for t in terms_meta):
-        # some query term has no postings in this shard → empty AND
-        return _empty_result()
     # rarest-first by shard-local posting count
     order = sorted(terms_meta, key=lambda t: lists[t].n)
 
@@ -394,13 +401,7 @@ def _score_conjunctive(lists, caches, terms_meta, idfs, avgdl, k, deleted_ids):
         hit[pos_ok] = ids[pos[pos_ok]] == cand_ids[pos_ok]
         cand_ids = cand_ids[hit]
 
-    if deleted_ids.size and cand_ids.size:
-        dead = np.searchsorted(deleted_ids, cand_ids)
-        dead_ok = dead < deleted_ids.size
-        is_dead = np.zeros(cand_ids.size, dtype=bool)
-        is_dead[dead_ok] = deleted_ids[dead[dead_ok]] == cand_ids[dead_ok]
-        cand_ids = cand_ids[~is_dead]
-
+    cand_ids = cand_ids[_live(cand_ids, deleted_ids)]
     if cand_ids.size == 0:
         return _empty_result()
 
@@ -433,9 +434,6 @@ def _score_conjunctive(lists, caches, terms_meta, idfs, avgdl, k, deleted_ids):
     )
 
 
-PARTIAL_RESULT_SCHEMA = "doc_id long, score double, n_matched int"
-
-
 def _score_partial(
     lists, caches, terms_meta, idfs, avgdl, k, min_match, deleted_ids
 ):
@@ -449,10 +447,8 @@ def _score_partial(
     pruned: per-candidate upper bounds sum only the terms that HIT the
     candidate, exact scoring runs in upper-bound order and stops at θ
     like the conjunctive kernel, so tf/dl blocks of hopeless candidates
-    never decode."""
+    never decode. The kernel calls it only when some term is present."""
     present = [t for t in terms_meta if t in lists]
-    if not present:
-        return _empty_result().rename(columns={"term_count": "n_matched"})
     ids_per_term = {t: lists[t].decode_all_ids() for t in present}
     cand = np.unique(np.concatenate([ids_per_term[t] for t in present]))
     hits: dict[str, np.ndarray] = {}
@@ -465,15 +461,9 @@ def _score_partial(
         hit[ok] = ids[pos[ok]] == cand[ok]
         hits[t] = hit
         n_matched += hit
-    keep = n_matched >= min_match
-    if deleted_ids.size:
-        dead = np.searchsorted(deleted_ids, cand)
-        dead_ok = dead < deleted_ids.size
-        is_dead = np.zeros(cand.size, dtype=bool)
-        is_dead[dead_ok] = deleted_ids[dead[dead_ok]] == cand[dead_ok]
-        keep &= ~is_dead
+    keep = (n_matched >= min_match) & _live(cand, deleted_ids)
     if not keep.any():
-        return _empty_result().rename(columns={"term_count": "n_matched"})
+        return _empty_result("n_matched")
     cand, n_matched = cand[keep], n_matched[keep]
     for t in present:
         hits[t] = hits[t][keep]
@@ -515,63 +505,60 @@ def _build_lists(pdf: pd.DataFrame) -> dict:
     }
 
 
-def _shard_kernel(terms_meta, n_docs, avgdl, k):
-    """Build the per-shard conjunctive block-max scorer.
+def _kernel(meta, k: int | None, min_match: int | None = None):
+    """THE per-shard scorer of every packed scored query: conjunctive
+    (_score_conjunctive), or min-should-match (_score_partial) when
+    ``min_match`` is given; one query or many, one segment or many.
 
-    terms_meta: {term: (global_df, multiplicity)}, df and N segment-local
-    (ranking.rs:48-50). The returned kernel takes (pdf, deleted_ids) —
-    deleted_ids a sorted uint64 numpy array of this shard's deleted doc
-    ids (see _scatter for where it comes from).
+    ``meta``: {seg_i: (avgdl, idfs, {qid: terms_meta})} — idfs {term:
+    idf} and terms_meta {term: (df, multiplicity)} segment-local
+    (ranking.rs:48-50) — or a Spark BROADCAST of it. One query's
+    metadata is bytes and rides the task closure; a 100k-query sweep's
+    is megabytes, which in the closure would ship in EVERY task's
+    pickle, so query_segments broadcasts it (torrent, once per
+    executor). The returned ``kernel(seg_i, pdf, deleted_ids)`` groups
+    the shard's posting rows (the union of every query's terms) into
+    _TermLists ONCE and shares the block caches, so a block decoded for
+    one query is free for every other query touching it. deleted_ids:
+    the shard's sorted uint64 deleted doc ids (see _scatter). Output
+    rows carry the qid; the top-k across shards and the url resolve
+    happen at the Spark layer.
     """
-    idfs = {t: _idf(n_docs, df) for t, (df, _) in terms_meta.items()}
+    conjunctive = min_match is None
+    count_col = "term_count" if conjunctive else "n_matched"
 
-    def kernel(pdf: pd.DataFrame, deleted_ids: np.ndarray) -> pd.DataFrame:
-        if set(pdf["term"]) != set(terms_meta):
-            # some query term has no postings in this shard → empty AND
-            return _empty_result()
-        lists = _build_lists(pdf)
-        _stats_dict()["blocks_total"] += sum(
-            tl.block_last.size for tl in lists.values()
-        )
-        return _score_conjunctive(
-            lists, {}, terms_meta, idfs, avgdl, k, deleted_ids
-        )
-
-    return kernel
-
-
-def _batch_shard_kernel(meta_bc, n_docs, avgdl, k):
-    """Per-shard kernel scoring MANY conjunctive queries in one pass.
-
-    ``meta_bc`` is a Spark BROADCAST of (queries_meta, idfs) —
-    queries_meta: {qid: {term: (global_df, multiplicity)}}. A 100k-query
-    sweep's term metadata is megabytes; captured in the closure it
-    would ship in EVERY task's serialized pickle, broadcast it
-    transfers once per executor (torrent) and the tasks stay bytes-
-    sized. The shard's posting rows (the union of every query's terms)
-    are grouped into _TermLists ONCE and the block caches are SHARED —
-    a block decoded for one query is free for every other query
-    touching it. Output rows carry the qid; per-query top-k and url
-    resolution happen at the Spark layer.
-    """
-
-    def kernel(pdf: pd.DataFrame, deleted_ids: np.ndarray) -> pd.DataFrame:
-        queries_meta, idfs = meta_bc.value
-        lists = _build_lists(pdf)
-        _stats_dict()["blocks_total"] += sum(
-            tl.block_last.size for tl in lists.values()
-        )
-        caches: dict = {}
+    def kernel(seg_i, pdf: pd.DataFrame, deleted_ids) -> pd.DataFrame:
+        m = meta.value if isinstance(meta, Broadcast) else meta
+        avgdl, idfs, queries = m[seg_i]
+        present = set(pdf["term"])
+        # a conjunctive query missing a term in this shard is empty here
+        # (no decode); a partial one needs any of its terms
+        live = [
+            (qid, qm) for qid, qm in queries.items()
+            if (present.issuperset(qm) if conjunctive
+                else not present.isdisjoint(qm))
+        ]
         outs = []
-        for qid, qm in queries_meta.items():
-            out = _score_conjunctive(
-                lists, caches, qm, idfs, avgdl, k, deleted_ids
+        if live:
+            lists = _build_lists(pdf)
+            _stats_dict()["blocks_total"] += sum(
+                tl.block_last.size for tl in lists.values()
             )
-            if len(out):
-                out.insert(0, "qid", qid)
-                outs.append(out)
+            caches: dict = {}
+            for qid, qm in live:
+                out = (
+                    _score_conjunctive(
+                        lists, caches, qm, idfs, avgdl, k, deleted_ids)
+                    if conjunctive else
+                    _score_partial(
+                        lists, caches, qm, idfs, avgdl, k, min_match,
+                        deleted_ids)
+                )
+                if len(out):
+                    out.insert(0, "qid", qid)
+                    outs.append(out)
         if not outs:
-            e = _empty_result()
+            e = _empty_result(count_col)
             e.insert(0, "qid", pd.Series([], dtype=object))
             return e
         return pd.concat(outs, ignore_index=True)
@@ -599,6 +586,17 @@ def _route_deletes(seg: Segment, deletes_broadcast_max: int):
     return ids, None
 
 
+def _seg_list(segs) -> list[Segment]:
+    """A Segment, a {name: Segment} collection or a list → a non-empty
+    list of segments."""
+    if isinstance(segs, Segment):
+        segs = [segs]
+    seg_list = list(segs.values()) if isinstance(segs, dict) else list(segs)
+    if not seg_list:
+        raise ValueError("empty collection")
+    return seg_list
+
+
 def _union(frames: list[DataFrame]) -> DataFrame:
     out = frames[0]
     for f in frames[1:]:
@@ -606,22 +604,14 @@ def _union(frames: list[DataFrame]) -> DataFrame:
     return out
 
 
-def _new_stats(spark, stats: dict | None) -> None:
-    # created up front so early-abort paths still hand back readable
-    # (zero) accumulators
-    if stats is not None:
-        stats["blocks_decoded"] = spark.sparkContext.accumulator(0)
-        stats["blocks_total"] = spark.sparkContext.accumulator(0)
-
-
 def _counted(kernel, stats: dict):
     """The kernel, adding its decode counts to the stats accumulators."""
     acc_dec, acc_tot = stats["blocks_decoded"], stats["blocks_total"]
 
-    def counted(pdf, deleted_ids):
+    def counted(seg_i, pdf, deleted_ids):
         sd = _stats_dict()
         d0, t0 = sd["blocks_decoded"], sd["blocks_total"]
-        out = kernel(pdf, deleted_ids)
+        out = kernel(seg_i, pdf, deleted_ids)
         acc_dec.add(sd["blocks_decoded"] - d0)
         acc_tot.add(sd["blocks_total"] - t0)
         return out
@@ -631,41 +621,29 @@ def _counted(kernel, stats: dict):
 
 def _scatter(
     parts: list,
+    kernel,
     schema: str,
     deletes_broadcast_max: int,
-    broadcast_cands: bool,
     stats: dict | None = None,
 ) -> DataFrame:
-    """THE packed-query scatter/gather, for one segment or many →
-    candidate rows (``schema`` columns plus ``url``, ``_seg``, ``doc_id``).
+    """THE packed scatter, for one segment or many → the kernel's rows
+    (``schema`` columns) tagged ``_seg``, the segment's index in
+    ``parts``.
 
-    ``parts``: [(seg, rows, kernel)] — a segment, its term-filtered
-    postings, and its shard kernel ``kernel(pdf, deleted_ids)`` closed
-    over the segment-local N, avgdl and df. Every part's rows are tagged
-    ``_seg`` and scored in ONE groupBy("_seg", "shard").applyInPandas,
-    each group dispatching to its own segment's kernel: a collection
-    query costs one exchange and one kernel pass, not one per segment.
+    ``parts``: [(seg, rows)] — a segment and its term-filtered postings.
+    Every part's rows are tagged ``_seg`` and go through ONE
+    groupBy("_seg", "shard").applyInPandas calling
+    ``kernel(seg_i, pdf, deleted_ids)``: a collection query costs one
+    exchange and one kernel pass, not one per segment.
 
     Deletes: ids within the cap ride the task closure (resolved at
     read_segment — no job). A segment over the cap has its deletes
     table shard-partitioned (shard = pmod(doc_id, n_shards) derives
     from the id alone) and cogrouped on (_seg, shard), so each kernel
     call sees only its shard's slice and nothing reaches the driver.
-
-    Urls resolve BEFORE any global limit: each shard kernel already
-    pruned to its local top-k (+ ties), so the join touches ≤
-    ~k·n_shards rows per segment, and the k-boundary tie-break lands on
-    url — a deterministic, externally-reproducible order (the packed and
-    flat paths then agree with the SQL oracle's ORDER BY score DESC, url
-    even on exact ties). ``broadcast_cands`` broadcasts the CANDIDATE
-    side (r6): without the hint the planner either broadcasts the whole
-    docs tables (rebuilt per query — 25 MB at 500k docs) or, past the
-    auto-broadcast threshold, sort-merges them per query. Measured at
-    500k docs: cold p50 0.86-1.01 s → 0.68-0.70 s. Unbounded result sets
-    (no top-k) keep the planner's choice.
     """
-    deleted, kernels, tagged, dels = {}, {}, [], []
-    for i, (seg, rows, kernel) in enumerate(parts):
+    deleted, tagged, dels = {}, [], []
+    for i, (seg, rows) in enumerate(parts):
         deleted[i], d = _route_deletes(seg, deletes_broadcast_max)
         if d is not None:
             if seg.n_shards <= 0:
@@ -683,76 +661,177 @@ def _scatter(
                 shard_of_doc_id(seg.n_shards).alias("shard"),
                 "doc_id",
             ))
-        kernels[i] = kernel if stats is None else _counted(kernel, stats)
         tagged.append(rows.withColumn("_seg", F.lit(i)))
+    if stats is not None:
+        kernel = _counted(kernel, stats)
     out_schema = "_seg int, " + schema
 
     def run(key, pdf: pd.DataFrame, dead: np.ndarray) -> pd.DataFrame:
         i = int(key[0])
-        out = kernels[i](pdf, dead)
+        out = kernel(i, pdf, dead)
         out.insert(0, "_seg", np.full(len(out), i, dtype=np.int32))
         return out
 
     grouped = _union(tagged).groupBy("_seg", "shard")
     if not dels:
-        cands = grouped.applyInPandas(
+        return grouped.applyInPandas(
             lambda key, pdf: run(key, pdf, deleted[int(key[0])]), out_schema
         )
-    else:
-        def cg(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            dead = deleted[int(key[0])]
-            if len(right):
-                dead = np.union1d(dead, right["doc_id"].to_numpy(
-                    dtype=np.int64).view(np.uint64))
-            return run(key, left, dead)
 
-        cands = grouped.cogroup(
-            _union(dels).groupBy("_seg", "shard")
-        ).applyInPandas(cg, out_schema)
+    def cg(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        dead = deleted[int(key[0])]
+        if len(right):
+            dead = np.union1d(dead, right["doc_id"].to_numpy(
+                dtype=np.int64).view(np.uint64))
+        return run(key, left, dead)
 
-    docs = _union([
-        seg.docs.select(F.lit(i).alias("_seg"), "doc_id", "url")
-        for i, (seg, _, _) in enumerate(parts)
+    return grouped.cogroup(
+        _union(dels).groupBy("_seg", "shard")
+    ).applyInPandas(cg, out_schema)
+
+
+def _docs(segs: list[Segment]) -> DataFrame:
+    """Every segment's (_seg, doc_id, url), tagged like _scatter's rows."""
+    return _union([
+        s.docs.select(F.lit(i).alias("_seg"), "doc_id", "url")
+        for i, s in enumerate(segs)
     ])
-    if broadcast_cands:
+
+
+def _with_urls(cands: DataFrame, segs: list[Segment], broadcast: bool):
+    """Resolve _scatter's candidate rows to urls.
+
+    Urls resolve BEFORE any global limit: each shard kernel already
+    pruned to its local top-k (+ ties), so the join touches ≤
+    ~k·n_shards rows per segment, and the k-boundary tie-break lands on
+    url — a deterministic, externally-reproducible order (the packed and
+    flat paths then agree with the SQL oracle's ORDER BY score DESC, url
+    even on exact ties). ``broadcast`` broadcasts the CANDIDATE side
+    (r6): without the hint the planner either broadcasts the whole docs
+    tables (rebuilt per query — 25 MB at 500k docs) or, past the
+    auto-broadcast threshold, sort-merges them per query. Measured at
+    500k docs: cold p50 0.86-1.01 s → 0.68-0.70 s."""
+    if broadcast:
         cands = F.broadcast(cands)
-    return cands.join(docs, ["_seg", "doc_id"])
+    return cands.join(_docs(segs), ["_seg", "doc_id"])
 
 
-def scored_candidates(
+def _attach_release(df: DataFrame, bcs: list) -> DataFrame:
+    """Give a query frame a deterministic executor-storage release:
+    ``df.ss_release()`` unpersists the metadata broadcasts after the
+    caller's consuming action. Without it the broadcast is freed only
+    when the frame is GC'd AND ContextCleaner next runs — still correct,
+    but under sustained serving (thousands of bm25_batch calls, each
+    broadcasting MBs of query metadata) executor storage grows
+    unboundedly between cleaner cycles. ss_release is safe even if the
+    frame is re-executed later: unpersist(blocking=False) drops executor
+    blocks only; the driver re-ships the value on the next job."""
+
+    def ss_release() -> None:
+        for b in bcs:
+            b.unpersist(False)
+
+    df.ss_release = ss_release
+    return df
+
+
+def query_segments(
     segs: list[Segment],
-    query: str,
+    term_dfs: list[dict[str, int]] | None,
+    queries: dict[str, str],
     max_results: int | None,
-    term_dfs: list[dict[str, int]],
+    min_should_match: int | None = None,
     deletes_broadcast_max: int = DELETES_BROADCAST_MAX,
     stats: dict | None = None,
-) -> DataFrame | None:
-    """Conjunctive block-max candidates of one query over one or more
-    segments, in ONE scatter (_scatter) → (_seg, url, score, term_count),
-    each segment scored with its own N, avgdl and df (``term_dfs``, one
-    {term: df} per segment). A segment whose dictionary lacks a query
-    term contributes nothing (the missing-term AND abort, query.rs:
-    34-40). Each shard's rows are already cut to its top-k plus ties;
-    the caller applies the global top-k. None = no segment can match."""
-    multiplicity = Counter(normalise(query))
-    if not multiplicity:
-        return None
-    parts = []
+    columns: tuple[str, ...] | None = None,
+) -> DataFrame:
+    """THE request path of every packed scored query → (qid, url, score,
+    term_count) — n_matched instead of term_count when
+    ``min_should_match`` is given — ordered by qid, then score desc,
+    then url; ``columns`` selects from those.
+
+    ``term_dfs`` holds one {term: df} per segment covering (at least)
+    its dictionary's query terms; None probes each segment's dictionary
+    on the driver (Segment.term_dfs). Each segment is scored with its
+    own N, avgdl and df. Per segment, a conjunctive qid is dropped when
+    the dictionary lacks one of its terms (the missing-term AND abort,
+    query.rs:34-40); for a partial one, absent terms just don't match.
+    A segment with no qid left is skipped. The rest go through ONE
+    _scatter and one _kernel pass.
+
+    The finish: a max-score (qid, url) dedupe when more than one
+    segment is queried (QueryProcessor.hs:61-152; the global top-k
+    needs no per-segment cut — a url outside its segment's top-k has k
+    urls ahead of it in the merged ranking too), then orderBy().limit
+    for one query or a per-qid row_number window for many, both with
+    the score-then-url tie-break. The frame carries ``ss_release()``
+    (see _attach_release)."""
+    count_col = "term_count" if min_should_match is None else "n_matched"
+    spark = segs[0].postings.sparkSession
+    if stats is not None:  # up front: an empty result still reads zeros
+        stats["blocks_decoded"] = spark.sparkContext.accumulator(0)
+        stats["blocks_total"] = spark.sparkContext.accumulator(0)
+    columns = columns or ("qid", "url", "score", count_col)
+    multis = {qid: Counter(normalise(q)) for qid, q in queries.items()}
+    if term_dfs is None:
+        terms = sorted({t for m in multis.values() for t in m})
+        term_dfs = [s.term_dfs(terms) if terms else {} for s in segs]
+    parts, meta, qids = [], {}, set()
     for seg, dfs in zip(segs, term_dfs):
-        if any(t not in dfs for t in multiplicity):
+        seg_queries = {}
+        for qid, multiplicity in multis.items():
+            tm = {t: (dfs[t], m) for t, m in multiplicity.items() if t in dfs}
+            if tm and (min_should_match is not None
+                       or len(tm) == len(multiplicity)):
+                seg_queries[qid] = tm
+        if not seg_queries:
             continue
-        terms_meta = {t: (dfs[t], m) for t, m in multiplicity.items()}
-        parts.append((
-            seg,
-            seg.postings.filter(F.col("term").isin(list(multiplicity))),
-            _shard_kernel(terms_meta, seg.num_docs, seg.avgdl, max_results),
-        ))
+        terms = sorted({t for tm in seg_queries.values() for t in tm})
+        idfs = {t: _idf(seg.num_docs, dfs[t]) for t in terms}
+        meta[len(parts)] = (seg.avgdl, idfs, seg_queries)
+        parts.append((seg, seg.postings.filter(F.col("term").isin(terms))))
+        qids.update(seg_queries)
     if not parts:
-        return None
-    return _scatter(
-        parts, RESULT_SCHEMA, deletes_broadcast_max,
-        broadcast_cands=max_results is not None, stats=stats,
-    ).select("_seg", "url", "score", "term_count")
+        return _attach_release(spark.createDataFrame(
+            [], f"qid string, url string, score double, {count_col} int"
+        ).select(*columns), [])
+
+    one_query = len(qids) == 1
+    bcs = [] if one_query else [spark.sparkContext.broadcast(meta)]
+    cands = _scatter(
+        parts,
+        _kernel(bcs[0] if bcs else meta, max_results, min_should_match),
+        f"qid string, doc_id long, score double, {count_col} int",
+        deletes_broadcast_max, stats,
+    )
+    out = _with_urls(
+        cands, [s for s, _ in parts],
+        broadcast=one_query and max_results is not None,
+    )
+    order = [F.col("score").desc(), F.col("url")]
+    if len(segs) > 1:
+        # keep each (qid, url)'s best-scoring row; the count column
+        # breaks exact score ties so the surviving row is deterministic
+        w = Window.partitionBy("qid", "url").orderBy(
+            F.col("score").desc(), F.col(count_col).desc()
+        )
+        out = (
+            out.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+        )
+    if one_query:
+        out = out.orderBy(*order)
+        if max_results is not None:
+            out = out.limit(max_results)
+    else:
+        if max_results is not None:
+            w = Window.partitionBy("qid").orderBy(*order)
+            out = (
+                out.withColumn("_rk", F.row_number().over(w))
+                .filter(F.col("_rk") <= max_results)
+            )
+        out = out.orderBy("qid", *order)
+    return _attach_release(out.select(*columns), bcs)
 
 
 def wand_scored(
@@ -765,10 +844,9 @@ def wand_scored(
 ) -> DataFrame:
     """Scored conjunctive query over a packed segment → (url, score,
     term_count), rank-identical to the flat path (tests enforce it) —
-    the one-segment call of scored_candidates, the scatter that
-    registry.query_collection runs over a whole collection.
+    query_segments on one segment and one query.
 
-    ``term_dfs``: precomputed {term: global df} covering (at least) every
+    ``term_dfs``: precomputed {term: df} covering (at least) every
     query term present in this segment's dictionary; by default the
     segment's dictionary is probed on the driver (Segment.term_dfs).
 
@@ -780,23 +858,10 @@ def wand_scored(
     blocks the block-max bound could not prune (the Spark analogue of
     the reference's mmap-granularity reads, index_reader.rs:271-311).
     """
-    spark = seg.postings.sparkSession
-    _new_stats(spark, stats)
-    q_terms = sorted(set(normalise(query)))
-    if term_dfs is None:
-        term_dfs = seg.term_dfs(q_terms) if q_terms else {}
-    out = scored_candidates(
-        [seg], query, max_results, [term_dfs], deletes_broadcast_max, stats
-    )
-    if out is None:
-        return spark.createDataFrame(
-            [], "url string, score double, term_count int"
-        )
-    if max_results is not None:
-        out = out.orderBy(F.col("score").desc(), F.col("url")).limit(max_results)
-    return (
-        out.select("url", "score", "term_count")
-        .orderBy(F.col("score").desc(), F.col("url"))
+    return query_segments(
+        [seg], None if term_dfs is None else [term_dfs], {"": query},
+        max_results, deletes_broadcast_max=deletes_broadcast_max,
+        stats=stats, columns=("url", "score", "term_count"),
     )
 
 
@@ -813,75 +878,15 @@ def wand_partial(
     it). A doc qualifies when ≥ ``min_should_match`` DISTINCT query
     terms match; the score sums every matched instance. Terms absent
     from the dictionary simply don't match (no conjunctive fast abort —
-    disjunctive semantics). Same scatter/gather as wand_scored
-    (_scatter); candidate generation is the full union of present
+    disjunctive semantics). Same request path as wand_scored
+    (query_segments); candidate generation is the full union of present
     terms' id lists (the disjunctive floor), exact scoring stays
     θ-pruned in upper-bound order."""
-    spark = seg.postings.sparkSession
-    q_terms = normalise(query)
-    empty = spark.createDataFrame(
-        [], "url string, score double, n_matched int"
+    return query_segments(
+        [seg], None if term_dfs is None else [term_dfs], {"": query},
+        max_results, min_should_match, deletes_broadcast_max,
+        columns=("url", "score", "n_matched"),
     )
-    if not q_terms:
-        return empty
-    multiplicity = Counter(q_terms)
-    dfs = (
-        {t: term_dfs[t] for t in multiplicity if t in term_dfs}
-        if term_dfs is not None
-        else seg.term_dfs(list(multiplicity))
-    )
-    terms_meta = {
-        t: (dfs[t], m) for t, m in multiplicity.items() if t in dfs
-    }
-    if not terms_meta:
-        return empty
-    idfs = {t: _idf(seg.num_docs, df) for t, (df, _) in terms_meta.items()}
-    rows = seg.postings.filter(F.col("term").isin(list(terms_meta)))
-    avgdl, k, mm = seg.avgdl, max_results, min_should_match
-
-    def kernel(pdf: pd.DataFrame, deleted_ids: np.ndarray) -> pd.DataFrame:
-        lists = _build_lists(pdf)
-        _stats_dict()["blocks_total"] += sum(
-            tl.block_last.size for tl in lists.values()
-        )
-        return _score_partial(
-            lists, {}, terms_meta, idfs, avgdl, k, mm, deleted_ids
-        )
-
-    out = _scatter(
-        [(seg, rows, kernel)], PARTIAL_RESULT_SCHEMA, deletes_broadcast_max,
-        broadcast_cands=max_results is not None,
-    )
-    if max_results is not None:
-        out = out.orderBy(
-            F.col("score").desc(), F.col("url")
-        ).limit(max_results)
-    return (
-        out.select("url", "score", "n_matched")
-        .orderBy(F.col("score").desc(), F.col("url"))
-    )
-
-
-BATCH_RESULT_SCHEMA = "qid string, doc_id long, score double, term_count int"
-
-
-def _attach_release(df: DataFrame, bcs: list) -> DataFrame:
-    """Give a batch-query frame a deterministic executor-storage release:
-    ``df.ss_release()`` unpersists the metadata broadcasts after the
-    caller's consuming action. Without it the broadcast is freed only
-    when the frame is GC'd AND ContextCleaner next runs — still correct,
-    but under sustained serving (thousands of bm25_batch calls, each
-    broadcasting MBs of query metadata) executor storage grows
-    unboundedly between cleaner cycles. ss_release is safe even if the
-    frame is re-executed later: unpersist(blocking=False) drops executor
-    blocks only; the driver re-ships the value on the next job."""
-
-    def ss_release() -> None:
-        for b in bcs:
-            b.unpersist(False)
-
-    df.ss_release = ss_release
-    return df
 
 
 def bm25_batch(
@@ -914,72 +919,8 @@ def bm25_batch(
     after their consuming action to drop the query-metadata broadcast
     deterministically (see _attach_release).
     """
-    spark = seg.postings.sparkSession
-    _new_stats(spark, stats)
-    empty = _attach_release(
-        spark.createDataFrame(
-            [], "qid string, url string, score double, term_count int"
-        ),
-        [],
-    )
-    multis = {qid: Counter(normalise(q)) for qid, q in queries.items()}
-    all_terms = sorted({t for m in multis.values() for t in m})
-    if not all_terms:
-        return empty
-    # term_dfs: a collection caller probed every segment's dictionary
-    # up front (registry.collection_term_dfs) — same seam as wand_scored's
-    dfs = (
-        {t: term_dfs[t] for t in all_terms if t in term_dfs}
-        if term_dfs is not None
-        else seg.term_dfs(all_terms)
-    )
-    # global missing-term abort per query (query.rs:34-40): a query with
-    # any dictionary-absent term contributes nothing; drop it before the
-    # scan so its other terms don't widen the posting filter
-    queries_meta = {
-        qid: {t: (dfs[t], mult) for t, mult in m.items()}
-        for qid, m in multis.items()
-        if m and all(t in dfs for t in m)
-    }
-    if not queries_meta:
-        return empty
-    live_terms = sorted({t for qm in queries_meta.values() for t in qm})
-    rows = seg.postings.filter(F.col("term").isin(live_terms))
-
-    # idf is a pure function of (n_docs, df): precompute once, ship with
-    # the metadata in ONE broadcast (not the task closure — see
-    # _batch_shard_kernel)
-    idfs = {
-        t: _idf(seg.num_docs, df)
-        for qm in queries_meta.values()
-        for t, (df, _) in qm.items()
-    }
-    meta_bc = spark.sparkContext.broadcast((queries_meta, idfs))
-    kernel = _batch_shard_kernel(
-        meta_bc, seg.num_docs, seg.avgdl, max_results
-    )
-    # per-shard kernels already pruned each query to its local top-k
-    # (+ θ-ties), so the docs join touches ≤ ~k·n_shards rows per query;
-    # the per-qid global top-k is a row_number window with the same
-    # score-then-url tie-break as the single-query path
-    out = _scatter(
-        [(seg, rows, kernel)], BATCH_RESULT_SCHEMA, deletes_broadcast_max,
-        broadcast_cands=False, stats=stats,
-    )
-    if max_results is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("qid").orderBy(
-            F.col("score").desc(), F.col("url")
-        )
-        out = (
-            out.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= max_results)
-            .drop("_rn")
-        )
-    return _attach_release(
-        out.select("qid", "url", "score", "term_count").orderBy(
-            "qid", F.col("score").desc(), F.col("url")
-        ),
-        [meta_bc],
+    return query_segments(
+        [seg], None if term_dfs is None else [term_dfs], queries,
+        max_results, deletes_broadcast_max=deletes_broadcast_max,
+        stats=stats,
     )

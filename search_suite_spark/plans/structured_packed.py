@@ -11,7 +11,7 @@ conjunctive WITHIN a segment — a url whose terms are split across two
 segments does not match (each segment's unscored query sees only its
 own postings).
 
-Spark-first mapping — one kernel job + one aggregation, zero joins in
+Spark-first mapping — one kernel pass + one aggregation, zero joins in
 the set algebra:
 
   1. Every leaf gets an integer id. Text-leaf terms are driver-known;
@@ -19,13 +19,14 @@ the set algebra:
      each segment's dictionary (all patterns in one pass, the same
      batching as plans/structured._batched_regex_terms).
   2. Per segment, the packed postings join the tiny term→leaves map;
-     the union of all segments feeds ONE applyInPandas kernel grouped
-     by (segment, shard). Shards partition docs (doc-hash), so leaf
+     every segment's rows go through the scored queries' one scatter
+     (wand._scatter): ONE applyInPandas kernel grouped by (segment,
+     shard). Shards partition docs (doc-hash), so leaf
      membership is decidable shard-locally: a text leaf's ids are the
      sorted-array intersection of its terms' decoded id lists
      (ids-only decode — tf/dl stay packed, wand._TermList), a regex
      leaf's the union of its matched terms' lists. The kernel emits
-     bare (leaf, doc_id) rows.
+     bare (leaf, doc_id) rows of the docs its segment has not deleted.
   3. The clause tree compiles to a BOOLEAN COLUMN over per-doc leaf
      membership: `groupBy(doc_id).agg(collect_set(leaf))` then
      `filter(tree_expr)` — set union/intersection/difference over N
@@ -35,11 +36,12 @@ the set algebra:
      once per Conjunction child).
   4. urls resolve once at the end against the unioned docs tables.
 
-Deletes are filtered per segment (left-anti on (seg, doc_id)) before
-the membership aggregation — matching the reference, where each
-segment's unscored query consults its own deletions bitset, and a url
-deleted in one segment but live in another still surfaces via the
-union.
+Deletes are filtered per segment inside the kernel, routed like every
+other packed query's (wand._route_deletes: the snapshot's deleted ids
+ride the task closure, a table over the cap is cogrouped) — matching
+the reference, where each segment's unscored query consults its own
+deletions bitset, and a url deleted in one segment but live in another
+still surfaces via the union.
 """
 
 from __future__ import annotations
@@ -50,7 +52,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from search_suite_spark.operators.query import parse_query_terms
-from search_suite_spark.operators.wand import _TermList
+from search_suite_spark.operators.wand import (
+    _docs,
+    _live,
+    _scatter,
+    _seg_list,
+    _TermList,
+    _union,
+)
 from search_suite_spark.plans.structured import (
     Clause,
     ClauseRegex,
@@ -58,9 +67,9 @@ from search_suite_spark.plans.structured import (
     Conjunction,
     parse_structured_query,
 )
-from search_suite_spark.sources.segments import Segment
+from search_suite_spark.sources.segments import DELETES_BROADCAST_MAX, Segment
 
-_LEAF_SCHEMA = "seg_i int, leaf int, doc_id long"
+_LEAF_SCHEMA = "leaf int, doc_id long"
 
 
 def _assign_leaves(
@@ -112,19 +121,15 @@ def _membership_expr(clause: Clause, by_key: dict[tuple, int]) -> Column:
 
 
 def _leaf_kernel(text_req: dict[int, list[str]]):
-    """Per-(segment, shard) kernel: decode each tagged term's doc-id
-    list ONCE (ids only — wand._TermList.decode_all_ids; tf/dl never
-    unpack), then emit (leaf, doc_id) membership rows via sorted-array
-    set ops. A text leaf with a term absent from this shard is empty
-    here (no doc in the shard can hold every term — postings of one doc
-    never straddle shards within a segment)."""
+    """Per-(segment, shard) kernel for wand._scatter: decode each tagged
+    term's doc-id list ONCE (ids only — wand._TermList.decode_all_ids;
+    tf/dl never unpack), then emit (leaf, doc_id) membership rows via
+    sorted-array set ops, dropping the shard's deleted ids. A text leaf
+    with a term absent from this shard is empty here (no doc in the
+    shard can hold every term — postings of one doc never straddle
+    shards within a segment)."""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame(
-                {"seg_i": [], "leaf": [], "doc_id": []}
-            ).astype({"seg_i": "int32", "leaf": "int32", "doc_id": "int64"})
-        seg_i = int(pdf["seg_i"].iat[0])
+    def kernel(seg_i, pdf: pd.DataFrame, deleted_ids) -> pd.DataFrame:
         lists: dict[str, _TermList] = {}
         leaf_terms: dict[int, list[str]] = {}
         for t, g in pdf.groupby("term", sort=False):
@@ -161,20 +166,17 @@ def _leaf_kernel(text_req: dict[int, list[str]]):
                 ids = acc if acc is not None else np.empty(0, np.uint64)
             else:  # regex leaf: union of every matched term's list
                 ids = np.unique(np.concatenate([ids_of(t) for t in tagged]))
+            ids = ids[_live(ids, deleted_ids)]
             if ids.size:
                 out_leaf.append(np.full(ids.size, lf, dtype=np.int32))
                 out_ids.append(ids.view(np.int64))
         if not out_ids:
-            return pd.DataFrame(
-                {"seg_i": [], "leaf": [], "doc_id": []}
-            ).astype({"seg_i": "int32", "leaf": "int32", "doc_id": "int64"})
-        ids_all = np.concatenate(out_ids)
+            return pd.DataFrame({"leaf": [], "doc_id": []}).astype(
+                {"leaf": "int32", "doc_id": "int64"}
+            )
         return pd.DataFrame(
-            {
-                "seg_i": np.full(ids_all.size, seg_i, dtype=np.int32),
-                "leaf": np.concatenate(out_leaf),
-                "doc_id": ids_all,
-            }
+            {"leaf": np.concatenate(out_leaf),
+             "doc_id": np.concatenate(out_ids)}
         )
 
     return kernel
@@ -182,7 +184,6 @@ def _leaf_kernel(text_req: dict[int, list[str]]):
 
 def _segment_leaf_rows(
     seg: Segment,
-    seg_i: int,
     text_terms: list[str],
     text_map: list[tuple[str, int]],
     regex_pat: dict[int, str],
@@ -220,10 +221,9 @@ def _segment_leaf_rows(
         parts.append(
             tagged.select("term", F.explode("_lfs").alias("leaf"))
         )
-    tl = parts[0]
-    for p in parts[1:]:
-        tl = tl.unionByName(p)
-    tl = tl.groupBy("term").agg(F.collect_set("leaf").alias("leaves"))
+    tl = _union(parts).groupBy("term").agg(
+        F.collect_set("leaf").alias("leaves")
+    )
 
     rows = seg.postings
     if not regex_pat:
@@ -232,9 +232,7 @@ def _segment_leaf_rows(
         # broadcast the tiny map
         rows = rows.filter(F.col("term").isin(text_terms))
         tl = F.broadcast(tl)
-    return rows.join(tl, "term").select(
-        F.lit(seg_i).alias("seg_i"), "*"
-    )
+    return rows.join(tl, "term")
 
 
 def structured_ids_packed(
@@ -244,14 +242,7 @@ def structured_ids_packed(
     """Clause tree over packed segment(s) → DataFrame of distinct
     doc_ids in the result set (collection-wide leaf union + tree fold,
     StructuredProcessor.hs:57-71)."""
-    if isinstance(segs, Segment):
-        seg_list = [segs]
-    elif isinstance(segs, dict):
-        seg_list = list(segs.values())
-    else:
-        seg_list = list(segs)
-    if not seg_list:
-        raise ValueError("empty collection")
+    seg_list = _seg_list(segs)
     if isinstance(clause, str):
         clause = parse_structured_query(clause)
     spark = seg_list[0].postings.sparkSession
@@ -271,32 +262,12 @@ def structured_ids_packed(
         return spark.createDataFrame([], "doc_id long")
 
     parts = [
-        _segment_leaf_rows(s, i, text_terms, text_map, regex_pat)
-        for i, s in enumerate(seg_list)
+        (s, _segment_leaf_rows(s, text_terms, text_map, regex_pat))
+        for s in seg_list
     ]
-    allr = parts[0]
-    for p in parts[1:]:
-        allr = allr.unionByName(p)
-    memb_rows = allr.groupBy("seg_i", "shard").applyInPandas(
-        _leaf_kernel(live_text), _LEAF_SCHEMA
+    memb_rows = _scatter(
+        parts, _leaf_kernel(live_text), _LEAF_SCHEMA, DELETES_BROADCAST_MAX
     )
-
-    # per-segment delete filtering (each segment's unscored query
-    # consults its own deletions; the union across segments happens
-    # after) — one tagged anti-join covers every segment
-    del_parts = [
-        s.deletes.select(
-            F.lit(i).alias("seg_i"), F.col("doc_id")
-        ).distinct()
-        for i, s in enumerate(seg_list)
-        if s.deletes is not None
-    ]
-    if del_parts:
-        dels = del_parts[0]
-        for p in del_parts[1:]:
-            dels = dels.unionByName(p)
-        memb_rows = memb_rows.join(dels, ["seg_i", "doc_id"], "left_anti")
-
     memb = memb_rows.select("leaf", "doc_id").groupBy("doc_id").agg(
         F.collect_set("leaf").alias("_ls")
     )
@@ -311,17 +282,9 @@ def structured_query_packed(
     (doc_id, url); urls resolve once, after the id algebra collapses.
     The packed twin of plans.structured.structured_query — the two are
     rank-set-identical (tests/test_structured_packed.py)."""
-    if isinstance(segs, Segment):
-        seg_list = [segs]
-    elif isinstance(segs, dict):
-        seg_list = list(segs.values())
-    else:
-        seg_list = list(segs)
+    seg_list = _seg_list(segs)
     ids = structured_ids_packed(seg_list, query)
-    docs = seg_list[0].docs.select("doc_id", "url")
-    for s in seg_list[1:]:
-        docs = docs.unionByName(s.docs.select("doc_id", "url"))
-    out = ids.join(docs, "doc_id")
+    out = ids.join(_docs(seg_list).select("doc_id", "url"), "doc_id")
     # doc_id is xxhash64(url): equal ids ⇒ equal urls, so the distinct
     # only collapses the same doc appearing in SEVERAL segments — with a
     # single segment both join sides are already unique per doc_id and

@@ -25,10 +25,11 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
+from search_suite_spark.functions.normalise import normalise
 from search_suite_spark.plans.compaction import choose_merge_pair
 from search_suite_spark.operators.merge import merge_segments
+from search_suite_spark.operators.wand import _seg_list, query_segments
 from search_suite_spark.sources.segments import Segment, build_segment, read_segment
 
 _REPLACES = "replaces.json"  # compaction tombstone manifest (see below)
@@ -218,11 +219,8 @@ def collection_doc_status(
     from search_suite_spark.operators.query import doc_status_table
     from search_suite_spark.operators.build import InvertedIndex
 
-    seg_list = list(segs.values()) if isinstance(segs, dict) else list(segs)
-    if not seg_list:
-        raise ValueError("empty collection")
     parts = []
-    for s in seg_list:
+    for s in _seg_list(segs):
         idx = InvertedIndex(
             postings=None, docs=s.docs, terms=None,
             num_docs=s.num_docs, total_doc_len=s.total_doc_len,
@@ -251,6 +249,18 @@ def collection_term_dfs(
     return [s.term_dfs(terms) for s in seg_list]
 
 
+def _collection_query(segs, queries, max_results, min_should_match=None,
+                      columns=None) -> DataFrame:
+    """wand.query_segments over every segment of a collection, with the
+    dictionaries probed through collection_term_dfs."""
+    seg_list = _seg_list(segs)
+    terms = sorted({t for q in queries.values() for t in normalise(q)})
+    return query_segments(
+        seg_list, collection_term_dfs(seg_list, terms), queries,
+        max_results, min_should_match, columns=columns,
+    )
+
+
 def query_collection(
     segs: dict[str, Segment] | list[Segment],
     query: str,
@@ -261,36 +271,12 @@ def query_collection(
     dedupes urls keeping the max score and re-sorts by exact score.
 
     The dictionary probe and delete routing read metadata the segments
-    resolved when they were read (no Spark job), and every segment is
-    scored in ONE scatter (wand.scored_candidates — the same skeleton
-    wand_scored runs on one segment): an N-segment collection pays one
-    result action per query, not N+1 sequential submits. The global
-    top-k needs no per-segment cut: a url outside its segment's top-k
-    has k urls ahead of it in the merged ranking too."""
-    from search_suite_spark.functions.normalise import normalise
-    from search_suite_spark.operators.wand import scored_candidates
-
-    seg_list = list(segs.values()) if isinstance(segs, dict) else list(segs)
-    if not seg_list:
-        raise ValueError("empty collection")
-    q_terms = sorted(set(normalise(query)))
-    allr = scored_candidates(
-        seg_list, query, max_results, collection_term_dfs(seg_list, q_terms)
+    resolved when they were read (no Spark job); the query is
+    wand.query_segments over every segment — one exchange and one
+    kernel pass, the same plan wand_scored runs on one segment."""
+    return _collection_query(
+        segs, {"": query}, max_results, columns=("url", "score", "term_count")
     )
-    if allr is None:
-        return seg_list[0].postings.sparkSession.createDataFrame(
-            [], "url string, score double, term_count int"
-        )
-    w = W.partitionBy("url").orderBy(F.col("score").desc())
-    out = (
-        allr.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("url", "score", "term_count")
-        .orderBy(F.col("score").desc(), F.col("url"))
-    )
-    if max_results is not None:
-        out = out.limit(max_results)
-    return out
 
 
 def query_collection_batch(
@@ -299,58 +285,23 @@ def query_collection_batch(
     max_results: int | None = 10,
 ) -> DataFrame:
     """MANY scored queries across ALL segments in one Spark action →
-    (qid, url, score): per-(segment, qid) top-k inside the batch shard
+    (qid, url, score): per-(segment, qid) top-k inside the shard
     kernels, global per-qid url-dedupe keeping the max score, per-qid
     re-sort + limit — each qid's rows identical to
     ``query_collection(segs, queries[qid])``.
 
-    The N-segments × M-queries workload costs ONE result job total: the
-    dictionary probes run on the driver (collection_term_dfs), and the
-    reference answers this shape with one process per segment per query
+    The N-segments × M-queries request is one wand.query_segments call:
+    the dictionary probes run on the driver (collection_term_dfs), and
+    one kernel pass scores every query on every segment, where the
+    reference runs one process per segment per query
     (QueryProcessor.hs:72).
 
     The returned frame carries ``ss_release()`` (see wand._attach_release):
-    serving loops call it after their action to drop the per-segment
-    query-metadata broadcasts deterministically."""
-    from search_suite_spark.functions.normalise import normalise
-    from search_suite_spark.operators.wand import bm25_batch
-
-    seg_list = list(segs.values()) if isinstance(segs, dict) else list(segs)
-    if not seg_list:
-        raise ValueError("empty collection")
-    q_terms = sorted({t for q in queries.values() for t in normalise(q)})
-    dfs_list = collection_term_dfs(seg_list, q_terms)
-    parts, releases = [], []
-    for i, s in enumerate(seg_list):
-        p = bm25_batch(s, queries, max_results=max_results, term_dfs=dfs_list[i])
-        releases.append(p.ss_release)  # .select below returns a NEW frame
-        parts.append(p.select("qid", "url", "score"))
-    allr = parts[0]
-    for p in parts[1:]:
-        allr = allr.unionByName(p)
-    dd = W.partitionBy("qid", "url").orderBy(F.col("score").desc())
-    out = (
-        allr.withColumn("_rn", F.row_number().over(dd))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+    serving loops call it after their action to drop the query-metadata
+    broadcast deterministically."""
+    return _collection_query(
+        segs, queries, max_results, columns=("qid", "url", "score")
     )
-    if max_results is not None:
-        topk = W.partitionBy("qid").orderBy(
-            F.col("score").desc(), F.col("url")
-        )
-        out = (
-            out.withColumn("_rk", F.row_number().over(topk))
-            .filter(F.col("_rk") <= max_results)
-            .drop("_rk")
-        )
-    out = out.orderBy("qid", F.col("score").desc(), F.col("url"))
-
-    def _release_all() -> None:
-        for r in releases:
-            r()
-
-    out.ss_release = _release_all
-    return out
 
 
 def query_collection_partial(
@@ -361,51 +312,20 @@ def query_collection_partial(
 ) -> DataFrame:
     """Partial-match (min-should-match) scored query across ALL of a
     collection's segments → (url, score, n_matched): per-segment
-    wand_partial top-k with segment-local stats, union, url-dedupe
-    keeping the best-scoring row (its n_matched travels with it),
-    global re-sort + limit — the disjunctive twin of query_collection,
-    completing the flat/packed/collection symmetry for every scored
-    query mode (reference collections answer only conjunctive,
+    top-k with segment-local stats, url-dedupe keeping the
+    best-scoring row (its n_matched travels with it), global re-sort +
+    limit — the disjunctive twin of query_collection, completing the
+    flat/packed/collection symmetry for every scored query mode
+    (reference collections answer only conjunctive,
     QueryProcessor.hs:61-152; min-should-match is its own query.rs:
     192-193 TODO, so the collection composition has no reference
     counterpart to mirror — semantics follow query_collection's
     max-score url merge).
 
-    Same driver-round-trip shape as query_collection: driver-side
-    dictionary probes (collection_term_dfs), then one result job — N
-    segments never cost N sequential submits."""
-    from search_suite_spark.functions.normalise import normalise
-    from search_suite_spark.operators.wand import wand_partial
-
-    seg_list = list(segs.values()) if isinstance(segs, dict) else list(segs)
-    if not seg_list:
-        raise ValueError("empty collection")
-    q_terms = sorted(set(normalise(query)))
-    dfs_list = collection_term_dfs(seg_list, q_terms)
-    parts = [
-        wand_partial(
-            s,
-            query,
-            min_should_match=min_should_match,
-            max_results=max_results,
-            term_dfs=dfs_list[i],
-        )
-        for i, s in enumerate(seg_list)
-    ]
-    allr = parts[0]
-    for p in parts[1:]:
-        allr = allr.unionByName(p)
-    # keep the best-scoring row per url; n_matched desc breaks exact
-    # score ties so the surviving row's values are deterministic
-    w = W.partitionBy("url").orderBy(
-        F.col("score").desc(), F.col("n_matched").desc()
+    Same plan as query_collection: driver-side dictionary probes
+    (collection_term_dfs), then one wand.query_segments kernel pass
+    over every segment."""
+    return _collection_query(
+        segs, {"": query}, max_results, min_should_match,
+        columns=("url", "score", "n_matched"),
     )
-    out = (
-        allr.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .orderBy(F.col("score").desc(), F.col("url"))
-    )
-    if max_results is not None:
-        out = out.limit(max_results)
-    return out

@@ -1,9 +1,11 @@
 """Collection queries in one scatter, with no planning jobs.
 
-query_collection scores every segment in ONE groupBy("_seg", "shard")
-scatter (wand.scored_candidates), each segment with its own N, avgdl
-and df; its rows must equal the per-segment reference — the union of
-one-segment wand_scored results, deduped by url keeping the max score.
+query_collection, query_collection_partial and query_collection_batch
+score every segment in ONE groupBy("_seg", "shard") scatter
+(wand.query_segments), each segment with its own N, avgdl and df; their
+rows must equal the per-segment reference — the union of one-segment
+wand_scored / wand_partial results, deduped by url keeping the max
+score.
 The query metadata (deleted ids, dictionary footers, table schemas) is
 resolved when a segment is read, so reading a collection and planning a
 query over it submit no Spark job. Every test runs under both SegmentIO
@@ -11,18 +13,21 @@ backends (the seg_io fixture).
 """
 
 import os
+import re
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
-from search_suite_spark.operators.wand import wand_scored
+from search_suite_spark.operators.wand import wand_partial, wand_scored
 from search_suite_spark.sources import registry, segments
 from search_suite_spark.sources.corpus import pages_from_docs_list
 from search_suite_spark.sources.registry import (
     index_into_collection,
     load_collection,
     query_collection,
+    query_collection_batch,
+    query_collection_partial,
 )
 from search_suite_spark.sources.segment_io import current_io
 from search_suite_spark.sources.segments import delete_url, read_segment
@@ -67,54 +72,159 @@ def _collection(spark, col, n_segments):
     return load_collection(spark, col)  # snapshots that see the deletes
 
 
-def _reference(segs, query, k):
-    """Per-segment wand_scored, union, max-score url dedupe, top-k."""
+def _reference(segs, query, k, m=None):
+    """Per-segment wand_scored (wand_partial with ``m``), union,
+    max-score url dedupe (ties: the larger count), top-k."""
     best: dict[str, tuple] = {}
     for seg in segs.values():
-        for r in wand_scored(seg, query, max_results=k).collect():
-            row = (r["url"], round(r["score"], 9), r["term_count"])
-            if r["url"] not in best or row[1] > best[r["url"]][1]:
-                best[r["url"]] = row
+        df = (wand_scored(seg, query, max_results=k) if m is None
+              else wand_partial(seg, query, m, max_results=k))
+        for r in df.collect():
+            row = (r[0], round(r[1], 9), r[2])
+            if r[0] not in best or row[1:] > best[r[0]][1:]:
+                best[r[0]] = row
     rows = sorted(best.values(), key=lambda r: (-r[1], r[0]))
     return rows if k is None else rows[:k]
 
 
 def _rows(df):
-    return [(r["url"], round(r["score"], 9), r["term_count"])
-            for r in df.collect()]
+    return [(r[0], round(r[1], 9), r[2]) for r in df.collect()]
 
 
-@pytest.mark.parametrize("n_segments", [2, 3])
-def test_fused_collection_matches_per_segment_reference(
-    spark, tmp_path, seg_io, monkeypatch, n_segments
-):
-    col = str(tmp_path / "col")
-    segs = _collection(spark, col, n_segments)
-    assert len(segs) == n_segments
-    assert all(s.deleted_ids is not None for s in segs.values())
-    assert sum(s.deleted_ids.size for s in segs.values()) == 2
-    # the same collection read with the cap at 0: every segment holding
-    # deletes is over it, so its ids stay unresolved and queries take
-    # the cogroup-on-(_seg, shard) path
+def _over_cap(spark, col, monkeypatch):
+    """The collection read with the cap at 0: every segment holding
+    deletes is over it, so its ids stay unresolved and queries take the
+    cogroup-on-(_seg, shard) path."""
     with monkeypatch.context() as m:
         m.setattr(segments, "DELETES_BROADCAST_MAX", 0)
         over_cap = load_collection(spark, col)
     assert [s.deleted_ids is None for s in over_cap.values()] == [
         s.deletes is not None for s in over_cap.values()
     ]
-    for q in QUERIES:
-        for k in (2, None):
-            want = _reference(segs, q, k)
-            assert _rows(query_collection(segs, q, max_results=k)) == want, (
-                q, k)
-            got = _rows(query_collection(over_cap, q, max_results=k))
-            assert got == want, (q, k, "cogroup")
-    got = {r[0] for r in _rows(query_collection(segs, "alpha", None))}
-    assert "http://both" in got and not got & DELETED
-    # a url held by two segments comes back once, with its best score
-    both = [r for r in _rows(query_collection(segs, "alpha beta", None))
-            if r[0] == "http://both"]
-    assert len(both) == 1
+    return over_cap
+
+
+# partial queries: a url in two segments, deleted urls, a term missing
+# from some segments, a term missing from all
+PARTIAL_QUERIES = ["alpha beta", "beta zeta", "gamma shared zzznope"]
+# batch: every QUERIES entry (a qid with a term missing from some
+# segments, one missing from all) plus a qid that normalises to nothing
+BATCH = {f"q{i}": q for i, q in enumerate(QUERIES + ["!!!"])}
+
+
+@pytest.fixture(scope="module")
+def built_collections():
+    return {}
+
+
+def _shared_collection(spark, built, tmp_path_factory, n_segments):
+    """(collection dir, its segments): built once per module for each
+    storage backend and segment count."""
+    key = (type(current_io()).__name__, n_segments)
+    if key not in built:
+        col = str(tmp_path_factory.mktemp("shapes") / "col")
+        _collection(spark, col, n_segments)
+        built[key] = col
+    return built[key], load_collection(spark, built[key])
+
+
+def _fused(coll, shape, k):
+    """Every query of ``shape`` through its collection call → rows."""
+    if shape == "batch":
+        df = query_collection_batch(coll, BATCH, max_results=k)
+        rows = [(r[0], r[1], round(r[2], 9)) for r in df.collect()]
+        df.ss_release()
+        return rows
+    if shape == "scored":
+        return [_rows(query_collection(coll, q, max_results=k))
+                for q in QUERIES]
+    m = int(shape.split("-")[1])
+    return [_rows(query_collection_partial(coll, q, m, k))
+            for q in PARTIAL_QUERIES]
+
+
+def _expected(segs, shape, k):
+    """_fused's rows from the per-segment reference."""
+    if shape == "batch":
+        return [(qid, url, score) for qid in sorted(BATCH)
+                for url, score, _ in _reference(segs, BATCH[qid], k)]
+    if shape == "scored":
+        return [_reference(segs, q, k) for q in QUERIES]
+    m = int(shape.split("-")[1])
+    return [_reference(segs, q, k, m) for q in PARTIAL_QUERIES]
+
+
+SHAPES = [(n, shape) for shape in ("scored", "partial-1", "partial-2", "batch")
+          for n in (2, 3)]
+
+
+@pytest.mark.parametrize(
+    "n_segments, shape", SHAPES,
+    ids=[str(n) if s == "scored" else f"{s}-{n}" for n, s in SHAPES],
+)
+def test_fused_collection_matches_per_segment_reference(
+    spark, tmp_path_factory, seg_io, monkeypatch, built_collections,
+    n_segments, shape,
+):
+    """query_collection, query_collection_partial (min_should_match 1
+    and 2) and query_collection_batch equal the per-segment reference,
+    with the deletes both under the cap and forced over it."""
+    col, segs = _shared_collection(
+        spark, built_collections, tmp_path_factory, n_segments)
+    assert len(segs) == n_segments
+    assert all(s.deleted_ids is not None for s in segs.values())
+    assert sum(s.deleted_ids.size for s in segs.values()) == 2
+    over_cap = _over_cap(spark, col, monkeypatch)
+    for k in (2, None):
+        want = _expected(segs, shape, k)
+        assert _fused(segs, shape, k) == want, k
+        assert _fused(over_cap, shape, k) == want, (k, "cogroup")
+    if shape == "batch":
+        assert {qid for qid, _, _ in want} < set(BATCH)  # some qids empty
+        return
+    # a url held by two segments comes back once, a deleted one never
+    got = [r[0] for r in (
+        query_collection(segs, "alpha", None) if shape == "scored"
+        else query_collection_partial(segs, "alpha", 1, None)
+    ).collect()]
+    assert got.count("http://both") == 1 and not set(got) & DELETED
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().explainString(
+        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+
+
+def _kernel_nodes(df) -> int:
+    return len(re.findall(
+        r"\(\d+\) FlatMap(?:Co)?GroupsInPandas\b", _plan(df)))
+
+
+def test_every_collection_shape_plans_one_kernel(
+    spark, tmp_path_factory, built_collections
+):
+    """A collection request is one kernel pass whatever its shape or
+    segment count, and the structured path filters deletes in that
+    pass (no anti-join)."""
+    from search_suite_spark.plans.structured_packed import (
+        structured_query_packed,
+    )
+
+    _, segs = _shared_collection(
+        spark, built_collections, tmp_path_factory, 3)
+    seg_list = list(segs.values())
+    assert _kernel_nodes(query_collection_partial(segs, "alpha beta", 1)) == 1
+    assert _kernel_nodes(query_collection_batch(segs, BATCH)) == 1
+    assert _kernel_nodes(structured_query_packed(seg_list[:2], "alpha")) == 1
+    deleted = next(s for s in seg_list if s.deletes is not None)
+    assert deleted.deleted_ids is not None  # under the cap
+    out = structured_query_packed(deleted, "/\\ alpha\n/\\ beta")
+    assert "LeftAnti" not in _plan(out)
+    got = {r["url"] for r in out.collect()}
+    assert got and not got & DELETED
 
 
 def _jobs(spark, fn):

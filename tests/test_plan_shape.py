@@ -139,8 +139,9 @@ def test_spelling_scan_pushes_length_predicate(spark, tmp_path):
 
 
 def test_partial_and_collection_plans_stay_pruned(spark, tmp_path):
-    """wand_partial (and therefore query_collection_partial's per-
-    segment legs) must push the query-term isin into the posting scan —
+    """wand_partial (and query_collection_partial, the same
+    query_segments path over many segments) must push the query-term
+    isin into the posting scan —
     a disjunctive query still reads only its own terms' rows, never the
     segment."""
     from search_suite_spark.operators.wand import wand_partial
@@ -156,3 +157,49 @@ def test_partial_and_collection_plans_stay_pruned(spark, tmp_path):
     # the kernel is the ONLY Python stage: one ArrowEvalPython-free scan
     # side (FlatMapGroupsInPandas is the applyInPandas kernel itself)
     assert "BatchEvalPython" not in plan, plan
+
+
+def _subtree(plan: str, node: str) -> str:
+    """The lines of the first ``node`` subtree in a plan's tree text."""
+    lines = plan.splitlines()
+    for i, line in enumerate(lines):
+        m = re.match(r"^([\s:+\-]*)(\w+)", line)
+        if m and m.group(2) == node:
+            depth, out = len(m.group(1)), [line]
+            for nxt in lines[i + 1:]:
+                m2 = re.match(r"^([\s:+\-]*)(\w+)", nxt)
+                if not m2 or len(m2.group(1)) <= depth:
+                    break
+                out.append(nxt)
+            return "\n".join(out)
+    return ""
+
+
+def test_packed_query_shapes(spark, tmp_path):
+    """The one-segment plans the repo benchmark times: a top-k scored or
+    partial query broadcasts the kernel's output (not the docs table)
+    into the url resolve, and a batch scores every query in one kernel
+    node."""
+    from search_suite_spark.operators.wand import (
+        bm25_batch,
+        wand_partial,
+        wand_scored,
+    )
+    from search_suite_spark.sources.corpus import pages_from_docs_list
+    from search_suite_spark.sources.segments import build_segment
+
+    docs = [(f"http://p{i}", f"alpha beta gamma w{i}") for i in range(30)]
+    seg = build_segment(
+        pages_from_docs_list(spark, docs), str(tmp_path / "qseg"), n_shards=2
+    )
+    for df in (
+        wand_scored(seg, "alpha beta", max_results=5),
+        wand_partial(seg, "alpha zzz", min_should_match=1, max_results=5),
+    ):
+        tree = _plan(df).split("\n\n")[0]
+        under = _subtree(tree, "BroadcastExchange")
+        assert "FlatMapGroupsInPandas" in under, tree
+    batch = bm25_batch(seg, {"a": "alpha", "b": "beta gamma"}, max_results=5)
+    assert len(re.findall(
+        r"\(\d+\) FlatMapGroupsInPandas\b", _plan(batch))) == 1
+    batch.ss_release()

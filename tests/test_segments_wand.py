@@ -202,9 +202,10 @@ def test_blockmax_skips_scoring_decodes():
     row = {"term": "common", "shard": 0, **p}
     pdf = pd.DataFrame([row])
 
-    kernel = W._shard_kernel({"common": (df, 1)}, n_docs, avgdl, 5)
+    idfs = {"common": W._idf(n_docs, df)}
+    kernel = W._kernel({0: (avgdl, idfs, {"q": {"common": (df, 1)}})}, 5)
     W.DECODE_STATS.update(blocks_decoded=0, blocks_total=0)
-    out = kernel(pdf, np.empty(0, dtype=np.uint64))
+    out = kernel(0, pdf, np.empty(0, dtype=np.uint64))
 
     n_blocks = (n + BLOCK - 1) // BLOCK
     assert W.DECODE_STATS["blocks_total"] == n_blocks

@@ -136,18 +136,15 @@ def test_single_term_fastpath_matches_generic_kernel(skew_seg):
     rows = skew_seg.postings.filter(F.col("term") == "the").toPandas()
     one = rows[rows["shard"] == rows["shard"].iloc[0]]
     df = skew_seg.term_dfs(["the"])["the"]
-    meta = {"the": (df, 1)}
+    idfs = {"the": W._idf(skew_seg.num_docs, df)}
+    meta = {0: (skew_seg.avgdl, idfs, {"q": {"the": (df, 1)}})}
     deleted = np.empty(0, dtype=np.uint64)
 
     sd = W._stats_dict()
     d0 = sd["blocks_decoded"]
-    fast = W._shard_kernel(meta, skew_seg.num_docs, skew_seg.avgdl, 10)(
-        one, deleted
-    )
+    fast = W._kernel(meta, 10)(0, one, deleted)
     fast_decoded = sd["blocks_decoded"] - d0
-    full = W._shard_kernel(meta, skew_seg.num_docs, skew_seg.avgdl, None)(
-        one, deleted
-    )
+    full = W._kernel(meta, None)(0, one, deleted)
     top_fast = sorted(fast["score"], reverse=True)[:10]
     top_full = sorted(full["score"], reverse=True)[:10]
     assert np.allclose(top_fast, top_full, rtol=1e-12)
